@@ -39,6 +39,13 @@ def quant(col: Column, scale: float = 1e6) -> Column:
     return F.floor(col * F.lit(float(scale)) + F.lit(0.5))
 
 
+def round6(col: Column) -> Column:
+    """Half-up 6dp rounding, bit-identical to the oracles'
+    ``floor(x * 1e6 + 0.5) / 1e6`` (``round`` is half-even in one engine
+    and half-up in the other)."""
+    return quant(col) / F.lit(1e6)
+
+
 def mean_grid(col: Column, scale: float = 1e6) -> Column:
     """Aggregate: order-independent grid mean of ``col``. Inputs are
     quantized to the grid, summed EXACTLY as integers, divided once —

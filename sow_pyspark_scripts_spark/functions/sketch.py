@@ -45,15 +45,17 @@ def approx_pctls(
 ) -> Column:
     """N percentiles of ONE column from ONE sketch (array result).
 
-    r9 (guide §1.2 "per-task work"): N separate ``approx_pctl``
-    expressions in the same aggregate each build their OWN
-    Greenwald-Khanna summary — at the exactness pin (acc >= 2n, module
-    docstring) that is N full buffered copies of the column per task.
-    ``percentile_approx(col, array(ps), acc)`` builds one summary and
-    queries it at every rank: measured 9 deciles over lineitem sf0.1,
-    3.7-4.1s (nine sketches) -> 0.5-0.6s (one sketch), bit-identical
-    results — identical BY CONSTRUCTION at the exactness pin, where
-    both degenerate to the same discrete order statistics."""
-    return F.percentile_approx(
-        col, F.array(*[F.lit(p) for p in ps]), F.lit(acc)
-    )
+    N separate ``approx_pctl`` expressions in the same aggregate each
+    build their OWN Greenwald-Khanna summary — at the exactness pin
+    (acc >= 2n, module docstring) that is N full buffered copies of the
+    column per task. ``percentile_approx(col, array(ps), acc)`` builds
+    one summary and queries it at every rank: measured 9 deciles over
+    lineitem sf0.1, 3.7-4.1s (nine sketches) -> 0.5-0.6s (one sketch),
+    bit-identical results — identical BY CONSTRUCTION at the exactness
+    pin, where both degenerate to the same discrete order statistics.
+
+    On empty or all-null input the array form returns ONE null where N
+    scalar sketches return N nulls; the result is coalesced to N nulls
+    so callers that explode it keep one row per rank."""
+    res = F.percentile_approx(col, F.array(*[F.lit(p) for p in ps]), F.lit(acc))
+    return F.coalesce(res, F.array_repeat(F.lit(None), len(ps)))

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import tokenize
+from ..functions.det import round6
 
 NUM_SEEDS = 16
 BAND_SIZE = 2
@@ -213,13 +214,10 @@ def lsh_verified_jaccard_pairs(
         .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
         .withColumn(
             "jaccard",
-            F.floor(
+            round6(
                 F.col("i").cast("double")
                 / (F.col("na") + F.col("nb") - F.col("i")).cast("double")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0),
+            ),
         )
     )
     return j.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
@@ -293,13 +291,10 @@ def jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
         .join(sb, "doc_b")
         .withColumn(
             "jaccard",
-            F.floor(
+            round6(
                 F.col("i").cast("double")
                 / (F.col("na") + F.col("nb") - F.col("i")).cast("double")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0),
+            ),
         )
     )
     return j.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")

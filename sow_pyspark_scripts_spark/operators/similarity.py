@@ -38,12 +38,9 @@ from ..functions.vectors import (
     norm2_grid,
     quant_arr,
 )
+from ..functions.det import round6
 
 NUM_PLANES = 4
-
-
-def _round6(c: Column) -> Column:
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 def _norm2_pre(aq: Column) -> Column:
@@ -60,13 +57,10 @@ def _sim_grid(qe: Column, ce: Column, qn2: Column, cn2: Column) -> Column:
     PRE-QUANTIZED grid-unit arrays (``quant_arr`` once per side before
     the join — per-pair re-quantization costs ~2x on bucket joins)."""
     return (
-        F.floor(
+        round6(
             dot_grid_pre(qe, ce).cast("double")
             / (F.sqrt(qn2.cast("double")) * F.sqrt(cn2.cast("double")))
-            * F.lit(1e6)
-            + F.lit(0.5)
         )
-        / F.lit(1e6)
     )
 
 

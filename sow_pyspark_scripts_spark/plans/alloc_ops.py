@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
+from ..functions.det import round6
 
 
 # ---------------------------------------------------------------------------
@@ -284,16 +285,13 @@ def agg_mix_shift_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate0 = F.col("rev0").cast("double") / F.col("n0") / 100
     rate1 = F.col("rev1").cast("double") / F.col("n1") / 100
 
-    def r6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
     def r4(c):
         return F.floor(c * 1e4 + F.lit(0.5)) / 1e4
 
     return per.join(F.broadcast(tot)).select(
         "c_mktsegment",
-        r6(share0).alias("share0"),
-        r6(share1).alias("share1"),
+        round6(share0).alias("share0"),
+        round6(share1).alias("share1"),
         r4(rate0).alias("aov0"),
         r4(rate1).alias("aov1"),
         r4((share1 - share0) * rate0).alias("mix_effect"),

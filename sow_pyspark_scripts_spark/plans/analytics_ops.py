@@ -611,9 +611,6 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _round6(c):
-        return F.floor(c * 1000000.0 + F.lit(0.5)) / 1000000.0
-
     def _assign(cent: DataFrame) -> DataFrame:
         qv = F.floor(F.col("v") * F.lit(1e6) + F.lit(0.5)).cast("long")
         qc = F.floor(F.col("c") * F.lit(1e6) + F.lit(0.5)).cast("long")

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..functions.sketch import approx_pctl, approx_pctls
 from ..registry import query
 from ..sources import read_table
+from ..functions.det import round6
 
 _DECILES = [k / 10.0 for k in range(1, 10)]
 
@@ -79,11 +80,10 @@ def dq_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     array; bucket assignment is a map-side higher-order filter and the
     final rollup has exactly 10 rows at any data scale."""
     orders = read_table(spark, sf_dir, "orders")
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    # ONE sketch queried at all 9 ranks (r9, functions/sketch.approx_pctls
+    # ONE sketch queried at all 9 ranks (functions/sketch.approx_pctls
     # — nine independent summaries buffered the column nine times per task)
     b = orders.agg(
-        F.transform(approx_pctls("o_totalprice", _DECILES), r6).alias("bl")
+        F.transform(approx_pctls("o_totalprice", _DECILES), round6).alias("bl")
     )
     binned = orders.crossJoin(F.broadcast(b)).select(
         (
@@ -258,11 +258,10 @@ def ml_best_split_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows is bit-stable. The float sum over sides is a two-term add —
     commutative bitwise, partition-order-proof."""
     li = read_table(spark, sf_dir, "lineitem")
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    # ONE sketch queried at all 9 ranks (r9): the nine separate summaries
-    # were the query's dominant stage (3.7-4.1s -> 0.5-0.6s measured)
+    # ONE sketch queried at all 9 ranks: nine separate summaries were
+    # the query's dominant stage (3.7-4.1s -> 0.5-0.6s measured)
     b = li.agg(
-        F.transform(approx_pctls("l_extendedprice", _DECILES), r6).alias("bl")
+        F.transform(approx_pctls("l_extendedprice", _DECILES), round6).alias("bl")
     )
     cand = b.select(F.explode("bl").alias("split"))
     assigned = li.crossJoin(F.broadcast(cand)).select(
@@ -289,7 +288,7 @@ def ml_best_split_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
         .select(
             F.col("split").alias("best_split"),
-            r6(F.col("gini")).alias("gini"),
+            round6(F.col("gini")).alias("gini"),
             "n_left",
             "n_right",
         )
@@ -380,10 +379,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return terms.agg(
         F.count(F.lit(1)).alias("n_communities"),
         F.max("m").alias("m_edges"),
-        (
-            F.floor(F.sum("t_u").cast("double") / F.lit(1e12) * F.lit(1e6) + F.lit(0.5))
-            / F.lit(1e6)
-        ).alias("modularity"),
+        round6(F.sum("t_u").cast("double") / F.lit(1e12)).alias("modularity"),
     )
 
 
@@ -449,10 +445,7 @@ def dq_rule_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rule",
         F.col("n").alias("n_checked"),
         F.col("v").alias("n_violations"),
-        (
-            F.floor(F.col("v").cast("double") / F.col("n") * F.lit(1e6) + F.lit(0.5))
-            / F.lit(1e6)
-        ).alias("violation_rate"),
+        round6(F.col("v").cast("double") / F.col("n")).alias("violation_rate"),
     )
 
 
@@ -511,12 +504,11 @@ def stats_mde_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("n") - 1)
         / F.lit(10000.0)
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return m.where(F.col("n") > 1).select(
         "event_type",
         "n",
-        r6(var_d).alias("var_dollars"),
-        r6(
+        round6(var_d).alias("var_dollars"),
+        round6(
             F.lit(_Z_ALPHA + _Z_BETA) * F.sqrt(2 * var_d / F.col("n"))
         ).alias("mde_dollars"),
     )
@@ -577,15 +569,14 @@ def agg_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wr = Window.partitionBy("r_name")
     wall = Window.partitionBy()
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return rev.select(
         "r_name",
         "n_name",
         (F.floor(F.col("cents").cast("double")) / F.lit(100.0)).alias("revenue"),
-        r6(F.col("cents").cast("double") / F.sum("cents").over(wr)).alias(
+        round6(F.col("cents").cast("double") / F.sum("cents").over(wr)).alias(
             "share_in_region"
         ),
-        r6(
+        round6(
             F.sum("cents").over(wr).cast("double") / F.sum("cents").over(wall)
         ).alias("region_share_of_total"),
     )
@@ -688,15 +679,14 @@ def events_classical_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s_u")
         )
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return det.join(F.broadcast(seas), "dow").select(
         "day",
         (F.floor(F.col("cents").cast("double")) / F.lit(100.0)).alias("observed"),
-        r6(F.col("trend") / F.lit(100.0)).alias("trend"),
-        r6(F.col("s_u").cast("double") / F.lit(1e6) / F.lit(100.0)).alias("seasonal"),
+        round6(F.col("trend") / F.lit(100.0)).alias("trend"),
+        round6(F.col("s_u").cast("double") / F.lit(1e6) / F.lit(100.0)).alias("seasonal"),
         F.when(
             F.col("det_u").isNotNull(),
-            r6((F.col("det_u") - F.col("s_u")).cast("double") / F.lit(1e6) / F.lit(100.0)),
+            round6((F.col("det_u") - F.col("s_u")).cast("double") / F.lit(1e6) / F.lit(100.0)),
         ).alias("remainder"),
     )
 
@@ -775,8 +765,7 @@ def ml_logreg_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long") / F.lit(10000.0)).alias("x"),
         F.when(F.col("event_type") == "purchase", 1.0).otherwise(0.0).alias("y"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    p_of = lambda: r6(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("w") * F.col("x"))))  # noqa: E731
+    p_of = lambda: round6(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("w") * F.col("x"))))  # noqa: E731
     w = ev.sparkSession.range(1).select(F.lit(0.0).alias("w"))
     for _ in range(_LOGREG_ITERS):
         p = p_of()
@@ -817,9 +806,9 @@ def ml_logreg_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("l_u"),
     )
     return w.crossJoin(F.broadcast(loss)).select(
-        r6(F.col("w")).alias("weight"),
+        round6(F.col("w")).alias("weight"),
         "n",
-        r6(F.col("l_u").cast("double") / F.col("n") / F.lit(1e6)).alias("avg_log_loss"),
+        round6(F.col("l_u").cast("double") / F.col("n") / F.lit(1e6)).alias("avg_log_loss"),
     )
 
 
@@ -885,13 +874,12 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     ssb = F.col("sum_gm") - F.col("s_tot").cast("double") * F.col("s_tot") / F.col("n_tot")
     ssw = F.col("ss_all") - F.col("sum_gm")
     r4 = lambda c: F.floor(c * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)  # noqa: E731
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return tot.select(
         "k",
         "n_tot",
         r4(ssb / F.lit(10000.0)).alias("ss_between_dollars"),
         r4(ssw / F.lit(10000.0)).alias("ss_within_dollars"),
-        r6((ssb / (F.col("k") - 1)) / (ssw / (F.col("n_tot") - F.col("k")))).alias(
+        round6((ssb / (F.col("k") - 1)) / (ssw / (F.col("n_tot") - F.col("k")))).alias(
             "f_stat"
         ),
     )

@@ -1,28 +1,28 @@
-"""Stored ANN index: build-once / query-many split for the PQ family.
+"""Stored indexes: the build-once / query-many split.
 
-Round-2's PQ tier (`plans/dsel_ops.py`) trains the codebook and
-re-encodes the corpus INSIDE every query call — correct and
-deterministic, but not the production read path: at 100 TB nobody
-re-encodes 16B vectors per query. This module persists the index the
-way `operators/dedup.band_signatures` already models it for MinHash
-(probed by `dedup_minhash_incremental`):
+The ANN index persists what the in-query PQ forms (`plans/dsel_ops.py`)
+would otherwise re-encode on every call:
 
-  - ``pq_codebook``  (sub, cell, carr)      — <=64 rows, KB-scale
-  - ``pq_codes``     (vec_id, c0..c3, qerr) — 4 nibbles/vector (the
-    2-bytes-per-vector relation; a production layout packs c0..c3 into
-    one SMALLINT — kept as columns here so the read plan stays
-    oracle-checkable without bit twiddling)
-  - ``ivf_centroids``(cent_id, centroid)    — coarse codebook, KB-scale
-  - ``ivf_cells``    (vec_id, ivf_cell)     — 2 ints/vector
+  - ``pq_codebook``     (sub, cell, carr)         — <=64 rows, KB-scale
+  - ``pq_codes``        (vec_id, c0..c3, qerr)    — 4 nibbles/vector (a
+    production layout packs c0..c3 into one SMALLINT — kept as columns
+    here so the read plan stays oracle-checkable without bit twiddling)
+  - ``ivf_centroids``   (cent_id, centroid)       — coarse codebook
+  - ``ivf_cells``       (vec_id, ivf_cell)        — 2 ints/vector
+  - ``ivfadc_codebook`` (sub, cell, cw6)          — residual codewords
+  - ``ivfadc_codes``    (vec_id, ivf_cell, rc0..rc3)
 
-plus stored-index twins of the three query paths whose bench time
-excludes all encoding: ``similarity_topk_pq_stored``,
-``similarity_topk_ivfpq_stored``, ``similarity_topk_pq_refine_stored``
-read codes + broadcast codebook only (the refine twin re-reads R=25
-float vectors per query through a broadcast join). The oracles are the
-dsel_ops oracles unchanged: the index is fully deterministic (sign-cell
-codes, mean codewords — Jegou et al. 2011 §V as cited there), so the
-stored read path must reproduce the in-query results bit-for-bit.
+The build encodes and trains through the same `plans/pq_common`
+functions as the in-query forms. Each ``*_stored`` twin reads codes +
+codebook from here instead of encoding, then runs the one shared search
+path: query LUT -> ``adc_topk`` -> optional ``refine_top5`` (the refine
+twin re-reads R=25 float vectors per query). The oracles are the
+in-query oracles unchanged: the index is fully deterministic (sign-cell
+codes, integer-grid codewords), so the stored read path reproduces the
+in-query results bit-for-bit.
+
+The doc index holds the MinHash band rows and the DSIR bucket tables
+for the dedup and data-selection read paths.
 
 ``embedding_pq_encode_delta`` mirrors `dedup_minhash_incremental`'s
 shape for the write path: a delta batch (vec_id % 10 == 0 stands in for
@@ -31,36 +31,35 @@ base corpus only — no base re-encoding, no codebook drift. Cells with
 no base member surface as ``n_missing`` (the production signal to
 retrain).
 
-Staging: the index lives under the system tempdir, keyed by the sf_dir
-AND a content fingerprint of ``embeddings.parquet`` (file names, sizes,
-mtimes) — regenerating a fixture can never serve a stale index (the
-failure mode ADVICE flagged on the streaming staging). Stale siblings
-of the same fixture are deleted on rebuild.
+Staging: each index lives under the system tempdir, keyed by the sf_dir
+AND a content fingerprint of its source table (file names, sizes,
+mtimes) — regenerating a fixture can never serve a stale index. Stale
+siblings of the same fixture are deleted on rebuild.
 
 Reference scope note: the reference repo (sbhatm1213/sow-pyspark-scripts)
 persists derived artifacts for downstream reads the same way —
 month-partitioned preprocessed Parquet in
 ``preprocess_and_store_parquets.py:236-252`` — this module applies that
-build-once/read-many pattern to the ANN tier.
+build-once/read-many pattern to the ANN and dedup tiers.
 """
 
 from __future__ import annotations
-
-from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 import hashlib
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.det import d2_grid_sql, d2r6_grid_sql
-from ..functions.vectors import d2r6_grid
+from ..functions.det import d2_grid_sql, d2r6_grid_sql, round6
+from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 from ..registry import query
 from ..sources import read_table
 from .pq_common import (
+    IVF_KEYS,
+    PQ_KEYS,
     _IVFADC_MP_ORACLE,
     _IVFADC_ORACLE,
     _IVFPQ_ORACLE,
@@ -71,29 +70,24 @@ from .pq_common import (
     _PQ_REFINE_ORACLE,
     _PQ_REFINE_R,
     _PQ_TOPK_ORACLE,
-    _ivfadc_d2,
+    _explode_codes,
+    _ivfadc_codebook,
+    _ivfadc_lut,
     _ivfadc_residuals,
     _ivfadc_subvecs,
     _pq_codebook,
     _pq_d2,
+    _pq_encoded,
+    _pq_lut,
     _pq_subvecs,
-    _round6,
+    adc_topk,
+    refine_top5,
 )
 
 _MARKER = "_INDEX_DONE"
 # Bump whenever the set/layout OR the numerics of index tables change:
 # the version is part of the staging dir name, so an index built by
-# older code can never satisfy a reader expecting newer tables
-# (v2 added the ivfadc_codes/ivfadc_codebook residual layer; v3 pinned
-# IVF centroids and PQ codewords to the exact-integer 1e-6 grid mean —
-# functions/det.mean_grid — the round-3 semdedup determinism fix; v4
-# pinned the REMAINING index numerics to exact integer grid arithmetic —
-# quantized PQ sign projections, integer d2 in the coarse assignment,
-# d2r6 qerr — the round-5 repo-wide close of the flake class; v5 added
-# the stored DSIR layer to the doc index: dsir_doc_buckets +
-# dsir_bucket_lr, VERDICT r4 task #3; v6 switched pq_codebook/pq code
-# paths to INTEGER grid-unit arrays — quantized once at the source, so
-# ADC luts are pure integer diffs, not per-pair re-quantizations).
+# older code can never satisfy a reader expecting newer tables.
 _INDEX_VERSION = 6
 
 
@@ -111,6 +105,14 @@ def _fingerprint(sf_dir: str, table: str = "embeddings") -> str:
         st = os.stat(src)
         h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()[:16]
+
+
+def _path(idx: str, table: str) -> str:
+    return os.path.join(idx, f"{table}.parquet")
+
+
+def _read(spark: SparkSession, idx: str, table: str) -> DataFrame:
+    return spark.read.parquet(_path(idx, table))
 
 
 def _index_root() -> str:
@@ -150,22 +152,15 @@ def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         spark.sparkContext.setJobDescription("ann build: pq codebook+codes")
         sv = _pq_subvecs(emb)
         cw = _pq_codebook(sv).persist()
-        cw.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "pq_codebook.parquet")
-        )
-        qe = sv.join(F.broadcast(cw), ["sub", "cell"]).select(
-            "vec_id", "sub", "cell", _pq_d2("sv", "carr").alias("d2")
-        )
-        codes = qe.groupBy("vec_id").agg(
+        cw.write.mode("overwrite").parquet(_path(out_dir, "pq_codebook"))
+        codes = _pq_encoded(sv, cw).groupBy("vec_id").agg(
             *[
                 F.min(F.when(F.col("sub") == s, F.col("cell"))).alias(f"c{s}")
                 for s in range(_PQ_M)
             ],
-            _round6(F.sum("d2")).alias("qerr"),
+            round6(F.sum("d2")).alias("qerr"),
         )
-        codes.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "pq_codes.parquet")
-        )
+        codes.write.mode("overwrite").parquet(_path(out_dir, "pq_codes"))
         cw.unpersist()
 
     def _ivf_chain() -> None:
@@ -174,29 +169,19 @@ def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         # the coarse assignment (numpy kernel over |vectors| x
         # |centroids|) has two consumers here — the cells write and the
         # residual layer — truncate its lineage so the kernel runs once
-        cells_p = cells.transform(_pin_lazy)
-        centroids.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "ivf_centroids.parquet")
+        ivf = cells.transform(_pin_lazy).select(
+            "vec_id", F.col("cell").alias("ivf_cell")
         )
-        cells_p.select("vec_id", F.col("cell").alias("ivf_cell")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "ivf_cells.parquet"))
+        centroids.write.mode("overwrite").parquet(_path(out_dir, "ivf_centroids"))
+        ivf.write.mode("overwrite").parquet(_path(out_dir, "ivf_cells"))
         # residual-PQ layer (IVFADC, Jegou §V): integer residual sign
-        # codes + integer codewords — REUSES the coarse layer just
-        # written; rsv feeds the residual codebook AND the codes write
-        rsv = _ivfadc_subvecs(
-            _ivfadc_residuals(spark, sf_dir, coarse=(centroids, cells_p))
-        ).transform(_pin_lazy)
-        rcw = (
-            rsv.select("sub", "cell", F.posexplode("rsv").alias("p", "v"))
-            .groupBy("sub", "cell", "p")
-            .agg(F.floor(F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)).alias("c"))
-            .groupBy("sub", "cell")
-            .agg(F.array_sort(F.collect_list(F.struct("p", "c"))).alias("pc"))
-            .select("sub", "cell", F.col("pc.c").alias("cw6"))
+        # codes + integer codewords over the coarse layer just written;
+        # rsv feeds the residual codebook AND the codes write
+        rsv = _ivfadc_subvecs(_ivfadc_residuals(emb, ivf, centroids)).transform(
+            _pin_lazy
         )
-        rcw.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "ivfadc_codebook.parquet")
+        _ivfadc_codebook(rsv).write.mode("overwrite").parquet(
+            _path(out_dir, "ivfadc_codebook")
         )
         rcodes = rsv.groupBy("vec_id").agg(
             F.min("ivf_cell").alias("ivf_cell"),
@@ -205,9 +190,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
                 for s in range(_PQ_M)
             ],
         )
-        rcodes.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "ivfadc_codes.parquet")
-        )
+        rcodes.write.mode("overwrite").parquet(_path(out_dir, "ivfadc_codes"))
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         futures = [pool.submit(_pq_chain), pool.submit(_ivf_chain)]
@@ -398,35 +381,36 @@ def stored_dsir_tables(
 
 
 def _read_codes_long(spark: SparkSession, idx: str) -> DataFrame:
-    """Stored codes, exploded to the (vec_id, sub, cell) relation the
-    ADC joins consume — a constant 4-row fan-out per vector, no shuffle."""
-    codes = spark.read.parquet(os.path.join(idx, "pq_codes.parquet"))
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("long").alias("sub"), F.col(f"c{s}").alias("cell")
-            )
-            for s in range(_PQ_M)
-        ]
-    )
-    return codes.select("vec_id", F.explode(rows).alias("sc")).select(
-        "vec_id", "sc.sub", "sc.cell"
-    )
+    """Stored PQ codes as (vec_id, sub, cell) rows."""
+    return _explode_codes(_read(spark, idx, "pq_codes"), "c", "vec_id")
 
 
 def _query_lut(spark: SparkSession, sf_dir: str, idx: str) -> DataFrame:
-    """(qid, sub, cell, pd2): exact query subvectors (queries keep full
-    precision under ADC) scored against every codeword of the STORED
-    broadcast codebook. The only float-vector read at query time outside
-    the refine twin's R-row fetch."""
+    """(qid, sub, cell, pd2): the 20 query vectors' exact subvectors
+    scored against the STORED codebook — the only float-vector read at
+    query time outside the refine twin's R-row fetch."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cw = spark.read.parquet(os.path.join(idx, "pq_codebook.parquet"))
-    sv_q = _pq_subvecs(emb.where(F.col("vec_id") < 20))
-    return (
-        sv_q.select(F.col("vec_id").alias("qid"), "sub", "sv")
-        .join(F.broadcast(cw), "sub")
-        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
+    return _pq_lut(
+        _pq_subvecs(emb.where(F.col("vec_id") < 20)), _read(spark, idx, "pq_codebook")
     )
+
+
+def _stored_pq_adc(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """ADC top-k of the 20 queries over the stored PQ codes."""
+    idx = ensure_ann_index(spark, sf_dir)
+    cand = _read_codes_long(spark, idx).withColumnRenamed("vec_id", "cid")
+    return adc_topk(cand, _query_lut(spark, sf_dir, idx), PQ_KEYS, k)
+
+
+def _stored_ivfadc_adc(spark: SparkSession, idx: str, q_resid: DataFrame) -> DataFrame:
+    """ADC top-5 of the query residuals (vec_id, ivf_cell, r6) — one row
+    per probed cell — over the stored residual codes: a candidate is
+    scored by the LUT of the probe that matches its own stored cell."""
+    lut = _ivfadc_lut(_ivfadc_subvecs(q_resid), _read(spark, idx, "ivfadc_codebook"))
+    cand = _explode_codes(
+        _read(spark, idx, "ivfadc_codes"), "rc", "vec_id", "ivf_cell"
+    ).withColumnRenamed("vec_id", "cid")
+    return adc_topk(cand, lut, IVF_KEYS, 5)
 
 
 _BUILD_ORACLE = f"""
@@ -483,8 +467,7 @@ def similarity_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_cells",
         "n_rows",
     )
-    ivf = spark.read.parquet(os.path.join(idx, "ivf_cells.parquet"))
-    ivf_row = ivf.agg(
+    ivf_row = _read(spark, idx, "ivf_cells").agg(
         F.countDistinct("ivf_cell").alias("n_cells"), F.count(F.lit(1)).alias("n_rows")
     ).select(F.lit("ivf").alias("component"), "n_cells", "n_rows")
     return pq.unionByName(ivf_row)
@@ -499,22 +482,7 @@ def similarity_topk_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     results to `similarity_topk_pq` — same oracle — with the encoding
     cost moved to `similarity_index_build`, which is the whole point:
     at 16B vectors the query job reads 2 bytes/vector, not 256."""
-    idx = ensure_ann_index(spark, sf_dir)
-    lut = _query_lut(spark, sf_dir, idx)
-    adc = (
-        _read_codes_long(spark, idx)
-        .withColumnRenamed("vec_id", "cid")
-        .join(F.broadcast(lut), ["sub", "cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return _stored_pq_adc(spark, sf_dir, 5)
 
 
 @query("similarity_topk_ivfpq_stored", _IVFPQ_ORACLE)
@@ -527,8 +495,8 @@ def similarity_topk_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     column: each executor holds whole cells of codes and a query
     touches only the executors owning its probed cells."""
     idx = ensure_ann_index(spark, sf_dir)
-    ivf = spark.read.parquet(os.path.join(idx, "ivf_cells.parquet"))
-    lutq = _query_lut(spark, sf_dir, idx).join(
+    ivf = _read(spark, idx, "ivf_cells")
+    lut = _query_lut(spark, sf_dir, idx).join(
         ivf.withColumnRenamed("vec_id", "qid"), "qid"
     )
     cand = (
@@ -536,18 +504,7 @@ def similarity_topk_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ivf, "vec_id")
         .withColumnRenamed("vec_id", "cid")
     )
-    adc = (
-        cand.join(F.broadcast(lutq), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return adc_topk(cand, lut, IVF_KEYS, 5)
 
 
 @query("similarity_topk_pq_refine_stored", _PQ_REFINE_ORACLE)
@@ -557,40 +514,8 @@ def similarity_topk_pq_refine_stored(spark: SparkSession, sf_dir: str) -> DataFr
     the persisted nibbles; only those R rows re-read their float vectors
     (broadcast semi-join on vec_id against the embeddings scan — the big
     side is probed, never shuffled) for the exact L2 re-rank to top-5."""
-    idx = ensure_ann_index(spark, sf_dir)
-    lut = _query_lut(spark, sf_dir, idx)
-    adc = (
-        _read_codes_long(spark, idx)
-        .withColumnRenamed("vec_id", "cid")
-        .join(F.broadcast(lut), ["sub", "cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    ws = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    short = (
-        adc.withColumn("rnk", F.row_number().over(ws))
-        .where(F.col("rnk") <= _PQ_REFINE_R)
-        .select("qid", "cid")
-    )
-    emb = read_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    ex = (
-        F.broadcast(short)
-        .join(vecs.select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")), "qid")
-        .join(vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce")), "cid")
-        .select(
-            "qid",
-            "cid",
-            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-        )
-    )
-    wf = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    return (
-        ex.withColumn("rank", F.row_number().over(wf).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "d2", "rank")
-    )
+    short = _stored_pq_adc(spark, sf_dir, _PQ_REFINE_R)
+    return refine_top5(short, read_table(spark, sf_dir, "embeddings"))
 
 
 @query("similarity_topk_ivfadc_stored", _IVFADC_ORACLE)
@@ -604,74 +529,17 @@ def similarity_topk_ivfadc_stored(spark: SparkSession, sf_dir: str) -> DataFrame
     determinism as `similarity_topk_ivfadc` — same oracle — with all
     training and corpus encoding paid by `similarity_index_build`."""
     idx = ensure_ann_index(spark, sf_dir)
-    emb = read_table(spark, sf_dir, "embeddings")
-    ivf = spark.read.parquet(os.path.join(idx, "ivf_cells.parquet"))
-    cents = spark.read.parquet(os.path.join(idx, "ivf_centroids.parquet"))
-    cq = cents.select(
-        F.col("cent_id").alias("ivf_cell"),
-        F.transform(
-            "centroid", lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5))
-        ).alias("c6"),
-    )
-    q_resid = (
-        emb.where(F.col("vec_id") < 20)
-        .select(
-            "vec_id",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda v: F.floor(v * F.lit(1e6) + F.lit(0.5)),
-            ).alias("x6"),
-        )
-        .join(ivf.where(F.col("vec_id") < 20), "vec_id")
-        .join(F.broadcast(cq), "ivf_cell")
-        .select(
-            "vec_id", "ivf_cell", F.zip_with("x6", "c6", lambda a, b: a - b).alias("r6")
-        )
-    )
-    rcw = spark.read.parquet(os.path.join(idx, "ivfadc_codebook.parquet"))
-    lut = (
-        _ivfadc_subvecs(q_resid)
-        .select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(rcw), "sub")
-        .select(
-            "qid",
-            "ivf_cell",
-            "sub",
-            "cell",
-            _ivfadc_d2("rsv", "cw6").alias("pd2"),
-        )
-    )
-    rcodes = spark.read.parquet(os.path.join(idx, "ivfadc_codes.parquet"))
-    code_rows = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("long").alias("sub"), F.col(f"rc{s}").alias("cell")
-            )
-            for s in range(_PQ_M)
-        ]
-    )
-    cand = rcodes.select(
-        F.col("vec_id").alias("cid"), "ivf_cell", F.explode(code_rows).alias("sc")
-    ).select("cid", "ivf_cell", "sc.sub", "sc.cell")
-    adc = (
-        cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    q = read_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 20)
+    ivf = _read(spark, idx, "ivf_cells").where(F.col("vec_id") < 20)
+    q_resid = _ivfadc_residuals(q, ivf, _read(spark, idx, "ivf_centroids"))
+    return _stored_ivfadc_adc(spark, idx, q_resid)
 
 
 @query("similarity_topk_ivfadc_multiprobe_stored", _IVFADC_MP_ORACLE)
 def similarity_topk_ivfadc_multiprobe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC nprobe=2 over the STORED index — the recall knob
     (`similarity_topk_ivfadc_multiprobe`, Jegou et al. 2011 §V-D) as a
-    read-path query (VERDICT r3 #4): candidates stream their stored
+    read-path query: candidates stream their stored
     (ivf_cell, residual codes); each query probes its TWO nearest
     STORED coarse centroids (`operators/similarity.probes_from_centroids`
     — the ivf_cells_multi kernel driven by the persisted codebook, no
@@ -683,71 +551,12 @@ def similarity_topk_ivfadc_multiprobe_stored(spark: SparkSession, sf_dir: str) -
     from ..operators.similarity import probes_from_centroids
 
     idx = ensure_ann_index(spark, sf_dir)
-    emb = read_table(spark, sf_dir, "embeddings")
-    cents = spark.read.parquet(os.path.join(idx, "ivf_centroids.parquet"))
-    probes = probes_from_centroids(
-        emb.where(F.col("vec_id") < 20), cents, nprobe=2
+    q = read_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 20)
+    cents = _read(spark, idx, "ivf_centroids")
+    probes = probes_from_centroids(q, cents, nprobe=2).select(
+        "vec_id", F.col("cell").alias("ivf_cell")
     )
-    cq = cents.select(
-        F.col("cent_id").alias("probe_cell"),
-        F.transform(
-            "centroid", lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5))
-        ).alias("c6"),
-    )
-    q_resid = (
-        emb.where(F.col("vec_id") < 20)
-        .select(
-            "vec_id",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda v: F.floor(v * F.lit(1e6) + F.lit(0.5)),
-            ).alias("x6"),
-        )
-        .join(probes.select("vec_id", F.col("cell").alias("probe_cell")), "vec_id")
-        .join(F.broadcast(cq), "probe_cell")
-        .select(
-            "vec_id",
-            F.col("probe_cell").alias("ivf_cell"),
-            F.zip_with("x6", "c6", lambda a, b: a - b).alias("r6"),
-        )
-    )
-    rcw = spark.read.parquet(os.path.join(idx, "ivfadc_codebook.parquet"))
-    lut = (
-        _ivfadc_subvecs(q_resid)
-        .select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(rcw), "sub")
-        .select(
-            "qid",
-            "ivf_cell",
-            "sub",
-            "cell",
-            _ivfadc_d2("rsv", "cw6").alias("pd2"),
-        )
-    )
-    rcodes = spark.read.parquet(os.path.join(idx, "ivfadc_codes.parquet"))
-    code_rows = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("long").alias("sub"), F.col(f"rc{s}").alias("cell")
-            )
-            for s in range(_PQ_M)
-        ]
-    )
-    cand = rcodes.select(
-        F.col("vec_id").alias("cid"), "ivf_cell", F.explode(code_rows).alias("sc")
-    ).select("cid", "ivf_cell", "sc.sub", "sc.cell")
-    adc = (
-        cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return _stored_ivfadc_adc(spark, idx, _ivfadc_residuals(q, probes, cents))
 
 
 # ---------------------------------------------------------------------------
@@ -824,7 +633,7 @@ def embedding_pq_encode_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("d2").isNull(), 1).otherwise(0)).cast("long").alias(
             "n_missing"
         ),
-        _round6(F.sum("d2")).alias("qerr"),
+        round6(F.sum("d2")).alias("qerr"),
     )
 
 
@@ -1056,7 +865,7 @@ def dedup_semantic_semdedup_sharded_stored(
 
     emb = read_table(spark, sf_dir, "embeddings")
     idx = ensure_ann_index(spark, sf_dir)
-    coarse = spark.read.parquet(os.path.join(idx, "ivf_cells.parquet")).select(
+    coarse = _read(spark, idx, "ivf_cells").select(
         "vec_id", F.col("ivf_cell").alias("cell")
     )
     sub = srp_buckets(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
+from ..functions.det import round6
 
 
 # ---------------------------------------------------------------------------
@@ -361,7 +362,7 @@ def events_absorbing_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         pk = stepped
     return pk.select(
         F.col("src").alias("start_state"),
-        (F.floor(F.col("v") * 1e6 + F.lit(0.5)) / 1e6).alias(
+        round6(F.col("v")).alias(
             f"p_convert_{_HORIZON}steps"
         ),
     )

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
+from ..functions.det import round6
 
 
 # ---------------------------------------------------------------------------
@@ -207,14 +208,9 @@ def feature_quantile_rank_normalize(
     lookup = ranked.select(
         "l_returnflag",
         "qty",
-        (
-            F.floor(
-                (2 * F.col("cum_before") + F.col("cnt") + 1).cast("double")
-                / (2 * F.col("n"))
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        round6(
+            (2 * F.col("cum_before") + F.col("cnt") + 1).cast("double")
+            / (2 * F.col("n"))
         ).alias("qnorm"),
     )
     return li.select(

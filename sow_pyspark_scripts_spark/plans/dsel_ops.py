@@ -39,40 +39,37 @@ the selection stage that follows it in a real pretraining pipeline.
 
 from __future__ import annotations
 
-from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
-
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import d2r6_grid
+from ..functions.det import d2r6_grid_sql, round6
+from ..functions.pin import pin as _pin_lazy
 from ..registry import query
 from ..sources import read_table
-from ..functions.det import d2r6_grid_sql
-from .pq_common import (  # noqa: F401 — re-exported for ann_index compat
+from .pq_common import (
+    IVF_KEYS,
+    PQ_KEYS,
     _IVFADC_MP_ORACLE,
     _IVFADC_ORACLE,
-    _MEAN6_V,
-    _IVFADC_RCELL,
-    _IVFADC_RPROJ,
     _IVFPQ_ORACLE,
     _PQ_CODE_CTE,
-    _PQ_M,
-    _PQ_PLANES,
     _PQ_REFINE_ORACLE,
     _PQ_REFINE_R,
-    _PQ_SUB,
     _PQ_TOPK_ORACLE,
-    _ivfadc_d2,
+    _ivfadc_codebook,
+    _ivfadc_lut,
     _ivfadc_residuals,
     _ivfadc_subvecs,
     _pq_codebook,
-    _pq_d2,
+    _pq_encoded,
+    _pq_lut,
     _pq_subvecs,
-    _pq_w,
-    _round6,
+    adc_topk,
+    recall_at_5,
+    refine_top5,
 )
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -227,11 +224,7 @@ def embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is exactly reproducible."""
     emb = read_table(spark, sf_dir, "embeddings")
     sv = _pq_subvecs(emb)
-    cw = _pq_codebook(sv)
-    qe = sv.join(F.broadcast(cw), ["sub", "cell"]).select(
-        "vec_id", "sub", "cell", _pq_d2("sv", "carr").alias("d2")
-    )
-    return qe.groupBy("vec_id").agg(
+    return _pq_encoded(sv, _pq_codebook(sv)).groupBy("vec_id").agg(
         F.concat_ws(
             "|",
             F.transform(
@@ -239,8 +232,31 @@ def embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: s["cell"].cast("string"),
             ),
         ).alias("codes"),
-        _round6(F.sum("d2")).alias("qerr"),
+        round6(F.sum("d2")).alias("qerr"),
     )
+
+
+def _pq_adc(emb: DataFrame, k: int) -> DataFrame:
+    """ADC top-k of the in-query PQ index: encode the corpus, train the
+    codebook, score the 20 queries' LUT against every candidate's
+    codes."""
+    sv = _pq_subvecs(emb)
+    lut = _pq_lut(sv.where(F.col("vec_id") < 20), _pq_codebook(sv))
+    cand = sv.select(F.col("vec_id").alias("cid"), "sub", "cell")
+    return adc_topk(cand, lut, PQ_KEYS, k)
+
+
+def _ivfadc_inquery_codes(emb: DataFrame) -> DataFrame:
+    """Residual sign-cell codes of every vector against its own coarse
+    cell. The result feeds codebook training, the query LUT and the
+    candidate stream, so its lineage is truncated: the coarse numpy
+    kernel and the coding run once, not once per consumer (3.3x at the
+    250x smoke)."""
+    from ..operators.similarity import ivf_cells
+
+    centroids, icells = ivf_cells(emb)
+    ivf = icells.select("vec_id", F.col("cell").alias("ivf_cell"))
+    return _ivfadc_subvecs(_ivfadc_residuals(emb, ivf, centroids)).transform(_pin_lazy)
 
 
 @query("similarity_topk_pq", _PQ_TOPK_ORACLE)
@@ -259,28 +275,7 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     20 query subvector rows against the broadcast codebook on `sub`
     alone (every cell is a lookup entry) and folds each squared distance
     inside zip_with — no per-dimension rows anywhere at query time."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    sv = _pq_subvecs(emb)
-    cw = _pq_codebook(sv)
-    lut = (
-        sv.where(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("qid"), "sub", "sv")
-        .join(F.broadcast(cw), "sub")
-        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
-    )
-    adc = (
-        sv.select(F.col("vec_id").alias("cid"), "sub", "cell")
-        .join(F.broadcast(lut), ["sub", "cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return _pq_adc(read_table(spark, sf_dir, "embeddings"), 5)
 
 
 @query("similarity_topk_pq_refine", _PQ_REFINE_ORACLE)
@@ -298,44 +293,7 @@ def similarity_topk_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     is probed, never shuffled. Everything upstream is the
     `similarity_topk_pq` plan (codes + broadcast LUT)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    sv = _pq_subvecs(emb)
-    cw = _pq_codebook(sv)
-    lut = (
-        sv.where(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("qid"), "sub", "sv")
-        .join(F.broadcast(cw), "sub")
-        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
-    )
-    adc = (
-        sv.select(F.col("vec_id").alias("cid"), "sub", "cell")
-        .join(F.broadcast(lut), ["sub", "cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    ws = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    short = (
-        adc.withColumn("rnk", F.row_number().over(ws))
-        .where(F.col("rnk") <= _PQ_REFINE_R)
-        .select("qid", "cid")
-    )
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    ex = (
-        F.broadcast(short)
-        .join(vecs.select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")), "qid")
-        .join(vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce")), "cid")
-        .select(
-            "qid",
-            "cid",
-            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-        )
-    )
-    wf = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    return (
-        ex.withColumn("rank", F.row_number().over(wf).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "d2", "rank")
-    )
+    return refine_top5(_pq_adc(emb, _PQ_REFINE_R), emb)
 
 
 @query("similarity_topk_ivfpq", _IVFPQ_ORACLE)
@@ -361,38 +319,21 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     _, icells = ivf_cells(emb)
     # the coarse assignment (numpy kernel over |vectors| x |centroids|)
-    # feeds BOTH the query LUT and the candidate stream — persist the
+    # feeds BOTH the query LUT and the candidate stream — pin the
     # 2-int-per-vector result so the kernel runs once, not twice
-    # localCheckpoint, not persist: truncates lineage for the two
-    # consumers without parking a CacheManager entry for the session
-    # lifetime (ADVICE r3 leak pattern; same fix as sql_recursive_bom)
+    # (localCheckpoint: truncates lineage without parking a CacheManager
+    # entry for the session lifetime)
     ivf = icells.select("vec_id", F.col("cell").alias("ivf_cell")).transform(_pin_lazy)
     sv = _pq_subvecs(emb)
-    cw = _pq_codebook(sv)
-    lut = (
-        sv.where(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("qid"), "sub", "sv")
-        .join(F.broadcast(cw), "sub")
-        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
+    lut = _pq_lut(sv.where(F.col("vec_id") < 20), _pq_codebook(sv)).join(
+        ivf.withColumnRenamed("vec_id", "qid"), "qid"
     )
-    lutq = lut.join(ivf.withColumnRenamed("vec_id", "qid"), "qid")
     cand = (
         sv.select("vec_id", "sub", "cell")
         .join(ivf, "vec_id")
         .withColumnRenamed("vec_id", "cid")
     )
-    adc = (
-        cand.join(F.broadcast(lutq), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return adc_topk(cand, lut, IVF_KEYS, 5)
 
 
 # ---------------------------------------------------------------------------
@@ -451,7 +392,7 @@ def corpus_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "dsir_logw",
         (
-            _round6(F.log(F.when(u < 1e-9, F.lit(1e-9)).otherwise(u)))
+            round6(F.log(F.when(u < 1e-9, F.lit(1e-9)).otherwise(u)))
             < F.col("dsir_logw")
         ).alias("keep"),
     )
@@ -621,52 +562,14 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The exact side is a broadcast-query L2 ranking (same shape as
     `similarity_topk_exact` but L2 to match what ADC approximates); the
-    PQ side is the `similarity_topk_pq` plan; the intersection is a
-    5-rows-per-query broadcast join."""
+    PQ side gates the STORED index (what a rebuild audits; identical to
+    the in-query form, test_stored_twins); the intersection is a
+    5-rows-per-query broadcast join (`pq_common.recall_at_5`)."""
     from .ann_index import similarity_topk_pq_stored
 
-    emb = read_table(spark, sf_dir, "embeddings")
-    # gate the STORED index (what a rebuild audits); results identical
-    # to the in-query form (test_stored_twins), cost excludes encoding
-    pq5 = similarity_topk_pq_stored(spark, sf_dir).select("qid", "cid")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    q = vecs.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    pairs = vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce")).crossJoin(
-        F.broadcast(q)
-    ).where(F.col("qid") != F.col("cid"))
-    d2 = pairs.select(
-        "qid",
-        "cid",
-        d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-    )
-    wex = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    ex5 = (
-        d2.withColumn("rnk", F.row_number().over(wex))
-        .where(F.col("rnk") <= 5)
-        .select("qid", "cid")
-    )
-    hits = (
-        ex5.join(
-            F.broadcast(pq5.withColumn("hit", F.lit(1))), ["qid", "cid"], "left"
-        )
-        .groupBy("qid")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"))
-    )
-    return hits.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        # integer-exact mean: sum(n_hit) is an exact long, one double
-        # division at the end — no float-sum merge-order exposure
-        (
-            F.floor(
-                F.sum("n_hit").cast("double")
-                / (F.lit(5.0) * F.count(F.lit(1)))
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("recall_at_5"),
+    return recall_at_5(
+        similarity_topk_pq_stored(spark, sf_dir),
+        read_table(spark, sf_dir, "embeddings"),
     )
 
 
@@ -704,46 +607,11 @@ def similarity_topk_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign projections; floor(sum/count+0.5) integer codewords; integer
     squared distances) — no float-sum-order exposure anywhere before
     the final 6dp division."""
-    resid = _ivfadc_residuals(spark, sf_dir)
-    # sv feeds codebook training, the query LUT and the candidate
-    # stream: truncate its lineage so the coarse numpy kernel + coding
-    # run once, not once per consumer (3.3x at the 250x smoke)
-    sv = _ivfadc_subvecs(resid).transform(_pin_lazy)
-    cw = (
-        sv.select("sub", "cell", F.posexplode("rsv").alias("p", "v"))
-        .groupBy("sub", "cell", "p")
-        .agg(
-            F.floor(F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)).alias("c")
-        )
-        .groupBy("sub", "cell")
-        .agg(F.array_sort(F.collect_list(F.struct("p", "c"))).alias("pc"))
-        .select("sub", "cell", F.col("pc.c").alias("cw6"))
-    )
-    lut = (
-        sv.where(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(cw), "sub")
-        .select(
-            "qid",
-            "ivf_cell",
-            "sub",
-            "cell",
-            _ivfadc_d2("rsv", "cw6").alias("pd2"),
-        )
-    )
+    emb = read_table(spark, sf_dir, "embeddings")
+    sv = _ivfadc_inquery_codes(emb)
+    lut = _ivfadc_lut(sv.where(F.col("vec_id") < 20), _ivfadc_codebook(sv))
     cand = sv.select(F.col("vec_id").alias("cid"), "ivf_cell", "sub", "cell")
-    adc = (
-        cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return adc_topk(cand, lut, IVF_KEYS, 5)
 
 
 _IVFADC_RECALL_ORACLE = f"""
@@ -799,52 +667,11 @@ def similarity_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes)."""
     from .ann_index import similarity_topk_ivfadc_stored
 
-    # gate the STORED index (what a rebuild audits); results identical
-    # to the in-query form (test_stored_twins), cost excludes encoding
-    a5 = similarity_topk_ivfadc_stored(spark, sf_dir).select("qid", "cid")
-    emb = read_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    q = vecs.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
+    # gate the STORED index, as similarity_pq_recall does
+    return recall_at_5(
+        similarity_topk_ivfadc_stored(spark, sf_dir),
+        read_table(spark, sf_dir, "embeddings"),
     )
-    d2 = (
-        vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-        .crossJoin(F.broadcast(q))
-        .where(F.col("qid") != F.col("cid"))
-        .select(
-            "qid",
-            "cid",
-            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-        )
-    )
-    wex = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    ex5 = (
-        d2.withColumn("rnk", F.row_number().over(wex))
-        .where(F.col("rnk") <= 5)
-        .select("qid", "cid")
-    )
-    hits = (
-        ex5.join(F.broadcast(a5.withColumn("hit", F.lit(1))), ["qid", "cid"], "left")
-        .groupBy("qid")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"))
-    )
-    return hits.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        # integer-exact mean, see similarity_pq_recall
-        (
-            F.floor(
-                F.sum("n_hit").cast("double")
-                / (F.lit(5.0) * F.count(F.lit(1)))
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("recall_at_5"),
-    )
-
-
-# _IVFADC_MP_ORACLE moved to pq_common (leaf) so the stored twin in
-# ann_index can share it at decoration time without a module cycle
 
 
 @query("similarity_topk_ivfadc_multiprobe", _IVFADC_MP_ORACLE)
@@ -866,73 +693,19 @@ def similarity_topk_ivfadc_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
     from ..operators.similarity import ivf_cells_multi
 
     emb = read_table(spark, sf_dir, "embeddings")
-    resid = _ivfadc_residuals(spark, sf_dir)
-    # sv feeds codebook training, the query LUT and the candidate
-    # stream: truncate its lineage so the coarse numpy kernel + coding
-    # run once, not once per consumer (3.3x at the 250x smoke)
-    sv = _ivfadc_subvecs(resid).transform(_pin_lazy)
-    cw = (
-        sv.select("sub", "cell", F.posexplode("rsv").alias("p", "v"))
-        .groupBy("sub", "cell", "p")
-        .agg(F.floor(F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)).alias("c"))
-        .groupBy("sub", "cell")
-        .agg(F.array_sort(F.collect_list(F.struct("p", "c"))).alias("pc"))
-        .select("sub", "cell", F.col("pc.c").alias("cw6"))
-    )
+    sv = _ivfadc_inquery_codes(emb)
     centroids, probes = ivf_cells_multi(emb, nprobe=2)
-    cq = centroids.select(
-        F.col("cent_id").alias("probe_cell"),
-        F.transform(
-            "centroid", lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5))
-        ).alias("c6"),
+    q = emb.where(F.col("vec_id") < 20)
+    q_resid = _ivfadc_residuals(
+        q,
+        probes.where(F.col("vec_id") < 20).select(
+            "vec_id", F.col("cell").alias("ivf_cell")
+        ),
+        centroids,
     )
-    q_resid = (
-        emb.where(F.col("vec_id") < 20)
-        .select(
-            "vec_id",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda v: F.floor(v * F.lit(1e6) + F.lit(0.5)),
-            ).alias("x6"),
-        )
-        .join(
-            probes.where(F.col("vec_id") < 20).select(
-                "vec_id", F.col("cell").alias("probe_cell")
-            ),
-            "vec_id",
-        )
-        .join(F.broadcast(cq), "probe_cell")
-        .select(
-            "vec_id",
-            F.col("probe_cell").alias("ivf_cell"),
-            F.zip_with("x6", "c6", lambda a, b: a - b).alias("r6"),
-        )
-    )
-    lut = (
-        _ivfadc_subvecs(q_resid)
-        .select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(cw), "sub")
-        .select(
-            "qid",
-            "ivf_cell",
-            "sub",
-            "cell",
-            _ivfadc_d2("rsv", "cw6").alias("pd2"),
-        )
-    )
+    lut = _ivfadc_lut(_ivfadc_subvecs(q_resid), _ivfadc_codebook(sv))
     cand = sv.select(F.col("vec_id").alias("cid"), "ivf_cell", "sub", "cell")
-    adc = (
-        cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return adc_topk(cand, lut, IVF_KEYS, 5)
 
 
 # ---------------------------------------------------------------------------
@@ -962,45 +735,9 @@ def similarity_ivfadc_multiprobe_recall(spark: SparkSession, sf_dir: str) -> Dat
     asserts nprobe=2 >= nprobe=1 on the fixture)."""
     from .ann_index import similarity_topk_ivfadc_multiprobe_stored
 
-    a5 = similarity_topk_ivfadc_multiprobe_stored(spark, sf_dir).select("qid", "cid")
-    emb = read_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    q = vecs.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    d2 = (
-        vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-        .crossJoin(F.broadcast(q))
-        .where(F.col("qid") != F.col("cid"))
-        .select(
-            "qid",
-            "cid",
-            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-        )
-    )
-    wex = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    ex5 = (
-        d2.withColumn("rnk", F.row_number().over(wex))
-        .where(F.col("rnk") <= 5)
-        .select("qid", "cid")
-    )
-    hits = (
-        ex5.join(F.broadcast(a5.withColumn("hit", F.lit(1))), ["qid", "cid"], "left")
-        .groupBy("qid")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"))
-    )
-    return hits.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        # integer-exact mean, see similarity_pq_recall
-        (
-            F.floor(
-                F.sum("n_hit").cast("double")
-                / (F.lit(5.0) * F.count(F.lit(1)))
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("recall_at_5"),
+    return recall_at_5(
+        similarity_topk_ivfadc_multiprobe_stored(spark, sf_dir),
+        read_table(spark, sf_dir, "embeddings"),
     )
 
 
@@ -1036,29 +773,22 @@ def _stream_events_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     # staging dir keyed by sf_dir AND a content fingerprint of the
-    # source parquet (names + sizes + mtimes): a regenerated fixture can
-    # never serve a stale staged copy (ADVICE r2 — the bare _STAGED
-    # marker never invalidated). Stale fingerprints of the same fixture
-    # are removed so reruns don't accumulate.
-    import hashlib
+    # source parquet: a regenerated fixture can never serve a stale
+    # staged copy. Stale fingerprints of the same fixture are removed so
+    # reruns don't accumulate.
     import shutil
 
-    src = os.path.join(sf_dir, "events.parquet")
-    h = hashlib.md5()
-    if os.path.isdir(src):
-        for p in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, p))
-            h.update(f"{p}:{st.st_size}:{st.st_mtime_ns};".encode())
-    else:
-        st = os.stat(src)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+    from .ann_index import _fingerprint
+
     base = "spark_stream_flush_" + sf_dir.strip("/").replace("/", "_").replace(
         ".", "_"
     )
     # "__h" separator keeps the stale-sibling sweep from matching a
     # DIFFERENT fixture whose sanitized name extends this one
-    # (ADVICE r3: /data/sf vs /data/sf_x both sanitize via '_')
-    stage = os.path.join(tempfile.gettempdir(), f"{base}__h{h.hexdigest()[:16]}")
+    # (/data/sf vs /data/sf_x both sanitize via '_')
+    stage = os.path.join(
+        tempfile.gettempdir(), f"{base}__h{_fingerprint(sf_dir, 'events')}"
+    )
     done = os.path.join(stage, "_STAGED")
     if not os.path.exists(done):
         tmp = tempfile.gettempdir()

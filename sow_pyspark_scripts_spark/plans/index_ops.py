@@ -39,10 +39,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
+from ..functions.det import round6
 
 
 # ---------------------------------------------------------------------------
@@ -154,9 +151,9 @@ def agg_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("y0").cast("long").alias("year0"),
         F.col("y1").cast("long").alias("year1"),
         "n_parts",
-        _q6(lasp).alias("laspeyres"),
-        _q6(paas).alias("paasche"),
-        _q6(F.sqrt(lasp * paas)).alias("fisher"),
+        round6(lasp).alias("laspeyres"),
+        round6(paas).alias("paasche"),
+        round6(F.sqrt(lasp * paas)).alias("fisher"),
     )
 
 
@@ -256,15 +253,10 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return au.agg(
         F.count(F.lit(1)).alias("n_users"),
-        (
-            F.floor(
-                F.sum("ndcg_u").cast("double")
-                / F.count(F.lit(1))
-                / 1e12
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        round6(
+            F.sum("ndcg_u").cast("double")
+            / F.count(F.lit(1))
+            / 1e12
         ).alias("ndcg_at_10"),
     )
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
+from ..functions.det import round6
 
 
 # ---------------------------------------------------------------------------
@@ -99,16 +100,11 @@ def events_retention_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flags.groupBy("day").agg(
         F.sum("active").alias("n_active"),
         F.sum("retained").alias("n_retained_7d"),
-        (
-            F.floor(
-                F.when(F.sum("active") == 0, 0.0)
-                .otherwise(
-                    F.sum("retained").cast("double") / F.sum("active")
-                )
-                * 1e6
-                + F.lit(0.5)
+        round6(
+            F.when(F.sum("active") == 0, 0.0)
+            .otherwise(
+                F.sum("retained").cast("double") / F.sum("active")
             )
-            / 1e6
         ).alias("retention_7d"),
     )
 
@@ -226,7 +222,7 @@ def events_cohort_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit = rates.groupBy("cohort").agg(slope.alias("slope"))
     return fit.select(
         "cohort",
-        (F.floor(-F.col("slope") * 1e6 + F.lit(0.5)) / 1e6).alias(
+        round6(-F.col("slope")).alias(
             "decay_lambda"
         ),
         (

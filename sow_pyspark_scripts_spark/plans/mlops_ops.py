@@ -46,10 +46,7 @@ from ..functions.pin import pin as _pin_lazy
 from ..registry import query
 from ..sources import read_table
 from .sql_common import _HASH_BUCKET_SQL
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
+from ..functions.det import round6
 
 
 def _split_bucket():
@@ -317,7 +314,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return qw.join(F.broadcast(cov)).select(
         "n_cal",
         "q_width",
-        _q6(F.col("n_in") / F.col("n").cast("double")).alias("coverage"),
+        round6(F.col("n_in") / F.col("n").cast("double")).alias("coverage"),
     )
 
 
@@ -394,7 +391,7 @@ def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_users",
         "n_a",
         "n_b",
-        _q6(chi2).alias("chi2_stat"),
+        round6(chi2).alias("chi2_stat"),
         (chi2 > 3.841).alias("srm_flag"),
     )
 
@@ -453,7 +450,7 @@ def pack_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("ntok").cast("long")).alias("total_tokens"),
         (F.col("bucket") * F.count(F.lit(1))).alias("padded_tokens"),
-        _q6(
+        round6(
             F.sum(F.col("ntok").cast("long")).cast("double")
             / (F.col("bucket") * F.count(F.lit(1)))
         ).alias("efficiency"),
@@ -584,10 +581,10 @@ def _qclf_features(docs: DataFrame, pin: bool = True) -> DataFrame:
     )
     feat = base.join(topw, "doc_id").select(
         "doc_id",
-        _q6(F.least(n, F.lit(100)) / 100.0).alias("x1"),
-        _q6(wlen_sum / n / 10.0).alias("x2"),
-        _q6(F.size(F.array_distinct("toks")).cast("double") / n).alias("x3"),
-        F.when(_q6(F.col("top_c").cast("double") / n) <= 0.1, 1.0)
+        round6(F.least(n, F.lit(100)) / 100.0).alias("x1"),
+        round6(wlen_sum / n / 10.0).alias("x2"),
+        round6(F.size(F.array_distinct("toks")).cast("double") / n).alias("x3"),
+        F.when(round6(F.col("top_c").cast("double") / n) <= 0.1, 1.0)
         .otherwise(0.0)
         .alias("y"),
     )
@@ -595,7 +592,7 @@ def _qclf_features(docs: DataFrame, pin: bool = True) -> DataFrame:
 
 
 def _qclf_p():
-    return _q6(
+    return round6(
         F.lit(1.0)
         / (
             F.lit(1.0)

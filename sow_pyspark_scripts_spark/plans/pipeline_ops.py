@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..functions.sketch import approx_pctl, approx_pctls
 from ..registry import query
 from ..sources import read_table, spread
+from ..functions.det import round6
 
 
 # ---------------------------------------------------------------------------
@@ -194,7 +195,6 @@ def dq_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_buckets"),
         F.sum("bc").alias("tot"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
         glob.crossJoin(F.broadcast(bstats))
         .select(
@@ -202,11 +202,11 @@ def dq_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_keys",
             "top_key",
             "top_key_rows",
-            r6(F.col("top_key_rows").cast("double") / F.col("n_rows")).alias(
+            round6(F.col("top_key_rows").cast("double") / F.col("n_rows")).alias(
                 "top_key_share"
             ),
             "max_bucket_rows",
-            r6(
+            round6(
                 F.col("max_bucket_rows").cast("double")
                 * F.col("n_buckets")
                 / F.col("tot")
@@ -269,7 +269,7 @@ def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "seg",
         "k",
         "l_distinct",
-        (F.floor(F.col("top_bc").cast("double") / F.col("k") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
+        round6(F.col("top_bc").cast("double") / F.col("k")).alias(
             "top_band_share"
         ),
         (F.col("l_distinct") >= 3).alias("l_diverse"),
@@ -439,12 +439,8 @@ def reco_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ia",
             "ib",
             "c",
-            (
-                F.floor(
-                    F.col("c") / F.sqrt(F.col("da").cast("double") * F.col("db")) * F.lit(1e6)
-                    + F.lit(0.5)
-                )
-                / F.lit(1e6)
+            round6(
+                F.col("c") / F.sqrt(F.col("da").cast("double") * F.col("db"))
             ).alias("cosine"),
         )
     )
@@ -667,12 +663,8 @@ def stats_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.col("obs_diff") * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)).alias(
             "obs_diff_cents"
         ),
-        (
-            F.floor(
-                (F.lit(1.0) + F.col("ge")) / (F.lit(1.0) + F.col("n_resamples")) * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
+        round6(
+            (F.lit(1.0) + F.col("ge")) / (F.lit(1.0) + F.col("n_resamples"))
         ).alias("p_value"),
     )
 

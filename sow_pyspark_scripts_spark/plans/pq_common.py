@@ -1,41 +1,47 @@
-"""Shared PQ / IVFADC building blocks (LEAF module).
+"""The one ANN search path of the PQ / IVFADC tier (leaf module).
 
-Constants, oracle CTE fragments and DataFrame helpers used by BOTH the
-in-query compressed-ANN tier (`plans/dsel_ops.py`) and the stored-index
-tier (`plans/ann_index.py`). A leaf module: it imports only pyspark and
-the operator layer — never `registry` or another plan module — so any
-plan file can pull these at import time without re-entering the
-registry's import chain half-initialized (importing dsel_ops directly
-used to crash exactly that way once ann_index imported its symbols).
+Every PQ-family query, in-query (`plans/dsel_ops.py`) or over the stored
+index (`plans/ann_index.py`), runs the same steps:
 
-See dsel_ops.py for the tier design notes and Jegou et al. 2011
-citations; everything here follows the house determinism rules
-(fixed integer plane weights, exact integer arithmetic for sign cells,
-6dp half-up quantization before ranking).
+1. codes + codebook: encode in the query (``_pq_subvecs`` /
+   ``_pq_codebook``, ``_ivfadc_residuals`` / ``_ivfadc_subvecs`` /
+   ``_ivfadc_codebook``) or read the stored index (``_explode_codes``);
+2. LUT: the exact query subvectors (or residuals) scored against every
+   codeword (``_pq_lut`` / ``_ivfadc_lut``);
+3. ``adc_topk``: candidate codes joined to the broadcast LUT, the
+   per-candidate distance summed and the per-query top-k kept;
+4. optionally ``refine_top5`` (exact re-rank of an ADC shortlist) or
+   ``recall_at_5`` (ADC top-5 against the exact L2 top-5).
+
+The oracle CTE fragments both plan modules register live here too. A
+leaf module: it imports only pyspark, ``functions`` and ``operators`` —
+never ``registry`` or another plan module — so any plan file can import
+it without re-entering the registry's import chain half-initialized.
+
+Determinism follows the house rules (Jegou et al. 2011 for the index
+design): fixed integer plane weights, exact integer arithmetic for sign
+cells and residuals, 6dp half-up quantization before ranking.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.det import (
-    cos_grid_sql,
     d2_grid_sql,
     d2r6_grid_sql,
-    mean_grid,
     mean_grid_sql,
+    quant,
     quant_sql,
+    round6,
 )
-from ..sources import read_table
-
-def _round6(c):
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
+from ..functions.vectors import d2r6_grid
+from ..operators.relational import top_n_per_group
 
 # Exact-integer 1e-6 grid mean (functions/det.py): every centroid /
 # codeword mean below is pinned so its value is independent of Spark's
-# partial-aggregate merge order — the round-3 semdedup flake class.
+# partial-aggregate merge order.
 _MEAN6_V = mean_grid_sql("v")
 _MEAN6_SV = mean_grid_sql("s.v")
 
@@ -60,14 +66,10 @@ def _proj_term_sql(arr: str, s: int, k: int, float_w: bool = False) -> str:
     """The unrolled sign-projection sum for subvector ``s`` / plane ``k``
     as ONE Spark-SQL fragment over the integer grid array ``arr``.
 
-    r6 lesson: building this chain as ~50 Python Column operations per
-    plane costs a py4j round-trip EACH — `_pq_subvecs` alone spent 2-3s
-    of driver time per query constructing expression trees before any
-    row moved. One f-string parsed JVM-side by a single F.expr builds
-    the identical tree (same left-assoc sum, same literal types:
-    integer weights for the quantized embedding path, `D`-suffixed
-    double weights for the residual path that always multiplied by
-    float(w)) for microseconds.
+    Built as one string parsed JVM-side by a single F.expr: the same
+    chain as ~50 Python Column operations per plane costs a py4j
+    round-trip each (2-3s of driver time per query). ``float_w`` gives
+    the `D`-suffixed double weights of the residual path.
     """
     terms = []
     for j in range(_PQ_SUB):
@@ -127,9 +129,9 @@ def _pq_subvecs(emb: DataFrame) -> DataFrame:
     # Quantize the vector to integer grid units ONCE, in its own
     # projection: everything downstream references the `eq` ATTRIBUTE,
     # so the unrolled sign sums stay compact element_at terms. Inlining
-    # the floor/cast per term (the first r5 form) grew the Generate
-    # stage past janino's 64 KB method limit — Spark silently fell back
-    # to interpreted evaluation and the PQ bench tier doubled.
+    # the floor/cast per term grows the Generate stage past janino's
+    # 64 KB method limit — Spark silently falls back to interpreted
+    # evaluation. Downstream d2s are then pure integer diffs.
     base = emb.select(
         "vec_id",
         F.expr(
@@ -138,12 +140,6 @@ def _pq_subvecs(emb: DataFrame) -> DataFrame:
         ).alias("eq"),
     )
 
-    # sv in INTEGER grid units (r5): quantize ONCE in `base`, so every
-    # downstream d2 is pure integer diffs — the per-pair
-    # re-quantization this replaced cost the PQ bench tier ~2x.
-    # Whole expression assembled as ONE SQL string -> ONE py4j call
-    # (r6: the per-term Column-arithmetic loop this replaces spent 2-3s
-    # of driver time per query on py4j round trips; tree is identical).
     structs = ", ".join(
         f"named_struct("
         f"'sub', CAST({s} AS BIGINT), "
@@ -156,9 +152,9 @@ def _pq_subvecs(emb: DataFrame) -> DataFrame:
     # sign sums + slices) inlined in the Generate, the fused delta-encode
     # stage (generate + % 10 filters + codebook join feeding d2) grew
     # past janino's 64 KB method limit — ERROR CodeGenerator, silent
-    # interpreted fallback (the same class as the `eq` fix above; found
-    # by the bench-log "Failed to compile" checklist). Project expressions
-    # split into helper methods; Generate's doConsume cannot.
+    # interpreted fallback (the same class as the `eq` fix above).
+    # Project expressions split into helper methods; Generate's
+    # doConsume cannot.
     arr = base.select("vec_id", F.expr(f"array({structs})").alias("sc_arr"))
     return arr.select("vec_id", F.explode("sc_arr").alias("sc")).select(
         "vec_id", "sc.sub", "sc.cell", "sc.sv"
@@ -171,9 +167,8 @@ def _pq_codebook(subvecs: DataFrame) -> DataFrame:
     map-side-combinable avg (the ONLY per-dimension shuffle in the PQ
     stage), then a 64-row regroup. KB-scale, broadcast downstream.
     The mean is the exact-integer grid mean (``mean_grid``) so the
-    codeword is independent of partial-aggregate merge order — the
-    round-3 semdedup flake class applies to codewords exactly as it
-    does to IVF centroids (both feed 6dp-rounded d2 rankings)."""
+    codeword is independent of partial-aggregate merge order (it feeds
+    6dp-rounded d2 rankings)."""
     flat = subvecs.select("sub", "cell", F.posexplode("sv").alias("p", "v"))
     # sv is already in integer grid units, so the pinned mean is the
     # plain integer mean floor(sum/count + 0.5) — exactly the integer
@@ -192,12 +187,12 @@ def _pq_codebook(subvecs: DataFrame) -> DataFrame:
 
 def _pq_d2(sv: str, carr: str):
     """Squared L2 between a subvector and a codeword (column NAMES),
-    rounded half-up to the 6dp grid FROM EXACT INTEGER SUMS (r5,
-    `d2r6_grid_sql` twin). Both arrays arrive ALREADY in 1e-6 integer
+    rounded half-up to the 6dp grid FROM EXACT INTEGER SUMS
+    (`d2r6_grid_sql` twin). Both arrays arrive ALREADY in 1e-6 integer
     grid units (`_pq_subvecs` / `_pq_codebook` quantize once at the
     source), so this is 16 pure integer diffs summed (order-free), one
-    division, one floor — unrolled codegen arithmetic, no per-pair
-    re-quantization. One SQL string -> one py4j call (r6)."""
+    division, one floor — unrolled codegen arithmetic. One SQL string
+    -> one py4j call."""
     total = " + ".join(
         f"(element_at({sv}, {j}) - element_at({carr}, {j}))"
         f" * (element_at({sv}, {j}) - element_at({carr}, {j}))"
@@ -205,6 +200,26 @@ def _pq_d2(sv: str, carr: str):
     )
     return F.expr(
         f"floor(cast(({total}) as double) / 1e6 + 0.5D) / 1e6"
+    )
+
+
+def _pq_encoded(subvecs: DataFrame, cw: DataFrame) -> DataFrame:
+    """(vec_id, sub, cell, d2): every subvector with its cell code and
+    its quantization error against the broadcast codebook — the one
+    encode step of both `embedding_pq_encode` and the index build."""
+    return subvecs.join(F.broadcast(cw), ["sub", "cell"]).select(
+        "vec_id", "sub", "cell", _pq_d2("sv", "carr").alias("d2")
+    )
+
+
+def _pq_lut(q_subvecs: DataFrame, cw: DataFrame) -> DataFrame:
+    """(qid, sub, cell, pd2): the query subvectors (exact under ADC)
+    scored against every codeword of the broadcast codebook, joined on
+    `sub` alone — (n_queries x <=64) rows, broadcast-sized."""
+    return (
+        q_subvecs.select(F.col("vec_id").alias("qid"), "sub", "sv")
+        .join(F.broadcast(cw), "sub")
+        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
     )
 
 
@@ -408,35 +423,28 @@ SELECT qid, cid, adc_d2, CAST(rnk AS BIGINT) AS rank FROM (
 """
 
 
-def _ivfadc_residuals(spark: SparkSession, sf_dir: str, coarse=None):
-    """(vec_id, ivf_cell, r6): per-vector integer residual array on the
-    1e-6 grid — x and its assigned coarse centroid are both quantized
-    BEFORE subtracting, so every downstream statistic is exact integer
-    arithmetic. The centroid table broadcasts (KB); the residual is one
-    zip_with over the scan, no per-dimension rows. Pass ``coarse`` =
-    (centroids, cells) to reuse an assignment already computed — the
-    numpy coarse kernel is the dominant cost at 500k+ vectors and the
-    index build needs the same relation twice."""
-    from ..operators.similarity import ivf_cells
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    centroids, icells = coarse if coarse is not None else ivf_cells(emb)
-    ivf = icells.select("vec_id", F.col("cell").alias("ivf_cell"))
+def _ivfadc_residuals(
+    emb: DataFrame, cells: DataFrame, centroids: DataFrame
+) -> DataFrame:
+    """(vec_id, ivf_cell, r6): each vector's integer residual to the
+    centroid of its (vec_id, ivf_cell) row in ``cells`` — its assigned
+    cell, or one probed cell per row. x and the centroid are both
+    quantized to the 1e-6 grid BEFORE subtracting, so every downstream
+    statistic is exact integer arithmetic. The centroid table
+    broadcasts (KB); the residual is one zip_with over the scan, no
+    per-dimension rows."""
     cq = centroids.select(
         F.col("cent_id").alias("ivf_cell"),
-        F.transform("centroid", lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5))).alias(
-            "c6"
-        ),
+        F.transform("centroid", lambda c: quant(c)).alias("c6"),
     )
     xq = emb.select(
         "vec_id",
         F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda v: F.floor(v * F.lit(1e6) + F.lit(0.5)),
+            F.col("embedding").cast("array<double>"), lambda v: quant(v)
         ).alias("x6"),
     )
     return (
-        xq.join(ivf, "vec_id")
+        xq.join(cells, "vec_id")
         .join(F.broadcast(cq), "ivf_cell")
         .select(
             "vec_id",
@@ -452,9 +460,8 @@ def _ivfadc_subvecs(resid: DataFrame) -> DataFrame:
     are exact integer sums (residual values ~4e6, 16 terms x weight <=3
     stay far under 2^53), so the sign cells are engine-independent by
     construction, not by accepted ulp risk."""
-    # One SQL string -> one py4j call (r6, same rationale as
-    # `_pq_subvecs`); float_w keeps the original double weight
-    # literals (the residual path always multiplied by float(w)).
+    # One SQL string -> one py4j call (as in `_pq_subvecs`); float_w
+    # keeps the double weight literals of the residual path.
     structs = ", ".join(
         f"named_struct("
         f"'sub', CAST({s} AS BIGINT), "
@@ -467,18 +474,32 @@ def _ivfadc_subvecs(resid: DataFrame) -> DataFrame:
     ).select("vec_id", "ivf_cell", "sc.sub", "sc.cell", "sc.rsv")
 
 
-def _ivfadc_d2(rsv: str, cw: str):
-    """pd2 between an integer residual subvector and an integer codeword
-    (column NAMES): exact integer sum of 16 squared diffs (<= ~1e15 <
-    2^53), ONE division at the end — floor(sum/1e6 + 0.5)/1e6 puts the
-    value on the same 6dp grid as the other ANN tiers. One SQL string
-    -> one py4j call (r6)."""
-    total = " + ".join(
-        f"(element_at({rsv}, {j}) - element_at({cw}, {j}))"
-        f" * (element_at({rsv}, {j}) - element_at({cw}, {j}))"
-        for j in range(1, _PQ_SUB + 1)
+def _ivfadc_codebook(rsv: DataFrame) -> DataFrame:
+    """(sub, cell, cw6): the residual codeword per cell, the integer
+    mean floor(sum/count + 0.5) of its members' residual subvectors —
+    exact, so independent of partial-aggregate merge order. Trained by
+    the index build and by the in-query IVFADC forms alike."""
+    return (
+        rsv.select("sub", "cell", F.posexplode("rsv").alias("p", "v"))
+        .groupBy("sub", "cell", "p")
+        .agg(F.floor(F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)).alias("c"))
+        .groupBy("sub", "cell")
+        .agg(F.array_sort(F.collect_list(F.struct("p", "c"))).alias("pc"))
+        .select("sub", "cell", F.col("pc.c").alias("cw6"))
     )
-    return F.expr(f"floor(({total}) / 1e6 + 0.5D) / 1e6")
+
+
+def _ivfadc_lut(q_rsv: DataFrame, rcw: DataFrame) -> DataFrame:
+    """(qid, ivf_cell, sub, cell, pd2): the query residual subvectors
+    (one set per probed cell) scored against every residual codeword.
+    Both arrays are integer grid units, so pd2 is `_pq_d2`'s exact
+    integer sum with one division — on the same 6dp grid as the other
+    ANN tiers."""
+    return (
+        q_rsv.select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
+        .join(F.broadcast(rcw), "sub")
+        .select("qid", "ivf_cell", "sub", "cell", _pq_d2("rsv", "cw6").alias("pd2"))
+    )
 
 
 _IVFADC_MP_ORACLE = f"""
@@ -560,3 +581,98 @@ SELECT qid, cid, adc_d2, CAST(rnk AS BIGINT) AS rank FROM (
   FROM adc
 ) WHERE rnk <= 5
 """
+
+
+# ---------------------------------------------------------------------------
+# the shared search steps: stored codes -> ADC top-k -> refine / recall
+# ---------------------------------------------------------------------------
+
+PQ_KEYS = ["sub", "cell"]
+IVF_KEYS = ["sub", "cell", "ivf_cell"]
+
+
+def _explode_codes(codes: DataFrame, prefix: str, *keep: str) -> DataFrame:
+    """Stored codes (one ``{prefix}0..3`` column per subvector) exploded
+    to the (*keep, sub, cell) rows the ADC join consumes — a constant
+    4-row fan-out per vector, no shuffle."""
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(s).cast("long").alias("sub"), F.col(f"{prefix}{s}").alias("cell")
+            )
+            for s in range(_PQ_M)
+        ]
+    )
+    return codes.select(*keep, F.explode(rows).alias("sc")).select(
+        *keep, "sc.sub", "sc.cell"
+    )
+
+
+def adc_topk(cand: DataFrame, lut: DataFrame, keys: list[str], k: int) -> DataFrame:
+    """(qid, cid, adc_d2, rank): asymmetric-distance top-``k`` per query.
+    Candidate code rows (cid, *keys) probe the broadcast LUT on
+    ``keys``; a candidate's distance is the 6dp-rounded sum of its
+    per-subvector LUT entries (exact: the entries are already on the
+    6dp grid), ranked by (adc_d2, cid) so ties break on the id."""
+    adc = (
+        cand.join(F.broadcast(lut), keys)
+        .where(F.col("cid") != F.col("qid"))
+        .groupBy("qid", "cid")
+        .agg(round6(F.sum("pd2")).alias("adc_d2"))
+    )
+    return top_n_per_group(
+        adc, ["qid"], [F.col("adc_d2"), F.col("cid")], k, "rank"
+    ).select("qid", "cid", "adc_d2", "rank")
+
+
+def _vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return emb.select(
+        F.col("vec_id").alias(id_col),
+        F.col("embedding").cast("array<double>").alias(vec_col),
+    )
+
+
+def refine_top5(short: DataFrame, emb: DataFrame) -> DataFrame:
+    """(qid, cid, d2, rank): exact L2 re-rank of an ADC shortlist
+    (Jegou et al. 2011 §VI, "ADC+R"). Only the shortlisted rows re-read
+    their float vectors, through broadcast joins on vec_id, so the big
+    side is probed, never shuffled."""
+    ex = (
+        F.broadcast(short.select("qid", "cid"))
+        .join(_vectors(emb, "qid", "qe"), "qid")
+        .join(_vectors(emb, "cid", "ce"), "cid")
+        .select("qid", "cid", d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"))
+    )
+    return top_n_per_group(
+        ex, ["qid"], [F.col("d2"), F.col("cid")], 5, "rank"
+    ).select("qid", "cid", "d2", "rank")
+
+
+def recall_at_5(a5: DataFrame, emb: DataFrame) -> DataFrame:
+    """(n_queries, recall_at_5): mean over the queries (vec_id < 20) of
+    |ANN top-5 ∩ exact L2 top-5| / 5. The exact side is a broadcast-query
+    L2 ranking; the intersection a 5-rows-per-query broadcast join; the
+    mean integer-exact (an exact long sum, one division at the end)."""
+    q = _vectors(emb.where(F.col("vec_id") < 20), "qid", "qe")
+    d2 = (
+        _vectors(emb, "cid", "ce")
+        .crossJoin(F.broadcast(q))
+        .where(F.col("qid") != F.col("cid"))
+        .select("qid", "cid", d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"))
+    )
+    ex5 = top_n_per_group(d2, ["qid"], [F.col("d2"), F.col("cid")], 5)
+    hits = (
+        ex5.join(
+            F.broadcast(a5.select("qid", "cid", F.lit(1).alias("hit"))),
+            ["qid", "cid"],
+            "left",
+        )
+        .groupBy("qid")
+        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"))
+    )
+    return hits.agg(
+        F.count(F.lit(1)).alias("n_queries"),
+        round6(
+            F.sum("n_hit").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))
+        ).alias("recall_at_5"),
+    )

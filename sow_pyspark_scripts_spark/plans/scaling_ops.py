@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
+from ..functions.det import round6
 
 
 # ---------------------------------------------------------------------------
@@ -187,7 +188,7 @@ def ml_data_scaling_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         "n_train",
         (F.floor(F.col("mse") * 1e4 + F.lit(0.5)) / 1e4).alias("test_mse"),
-        (F.floor(expo * 1e6 + F.lit(0.5)) / 1e6).alias("scaling_exponent"),
+        round6(expo).alias("scaling_exponent"),
     )
 
 
@@ -312,7 +313,7 @@ def stats_hotelling_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.select(
         "n0",
         "n1",
-        (F.floor(t2 * 1e6 + F.lit(0.5)) / 1e6).alias("t2"),
+        round6(t2).alias("t2"),
     )
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
+from ..functions.det import round6
 
 # ---------------------------------------------------------------------------
 # expr_variant_extract — VARIANT semi-structured field access
@@ -278,7 +279,7 @@ def api_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sdf.select(
         "o_orderpriority",
         F.col("n_orders").cast("long").alias("n_orders"),
-        (F.floor(F.col("avg_price") * 1e6 + F.lit(0.5)) / 1e6).alias("avg_price"),
+        round6(F.col("avg_price")).alias("avg_price"),
     )
 
 
@@ -315,18 +316,19 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag = os.path.join(tempfile.gettempdir(), f"spark_compact_frag_{tag}")
     compact = os.path.join(tempfile.gettempdir(), f"spark_compact_out_{tag}")
     ev.repartition(64).write.mode("overwrite").parquet(frag)
-    # r9 (guide §6): the compacted file count targets a BYTE size
-    # (~256 MB/file, the guide's 128 MB-1 GB band), not a constant —
-    # coalesce(2) was a fixture-scale tune that would under-parallelize
-    # a 100 TB nightly compaction to two writer tasks. Derived from the
-    # fragment bytes actually on disk: sub-256 MB inputs compact to one
-    # file (within the <=2-file layout assertion of
-    # test_compaction_reduces_file_count); a 100 TB table gets
-    # bytes/256 MB writers.
+    # The compacted file count targets a BYTE size (~256 MB/file, the
+    # 128 MB-1 GB band), not a constant: a fixed count would
+    # under-parallelize a 100 TB nightly compaction. Sized from the
+    # fragment bytes the writer left, listed through the Hadoop
+    # FileSystem of the session (the same API the write used), so HDFS
+    # and object-store paths size correctly: sub-256 MB inputs compact
+    # to one file; a 100 TB table gets bytes/256 MB writers.
+    frag_path = spark._jvm.org.apache.hadoop.fs.Path(frag)
+    fs = frag_path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
     frag_bytes = sum(
-        os.path.getsize(os.path.join(frag, p))
-        for p in os.listdir(frag)
-        if p.startswith("part-")
+        st.getLen()
+        for st in fs.listStatus(frag_path)
+        if st.getPath().getName().startswith("part-")
     )
     n_out = max(1, (frag_bytes + 256 * 1024 * 1024 - 1) // (256 * 1024 * 1024))
     spark.read.parquet(frag).coalesce(int(n_out)).write.mode(

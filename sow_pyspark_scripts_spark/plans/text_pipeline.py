@@ -32,6 +32,7 @@ from .sql_common import (  # noqa: F401 — re-exported for compat
     _LANG_SQL,
 )
 from ..sources import read_table
+from ..functions.det import round6
 
 # DuckDB twin of functions.text.normalize_text — the reference chain
 # verbatim (preprocess_and_store_parquets.py:112-135): four phrase
@@ -291,14 +292,9 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "tok",
             "tf",
-            (
-                F.floor(
-                    F.col("tf")
-                    * (F.log((F.col("n") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))) + F.lit(1.0))
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                )
-                / F.lit(1000000.0)
+            round6(
+                F.col("tf")
+                * (F.log((F.col("n") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))) + F.lit(1.0))
             ).alias("tfidf"),
         )
     )

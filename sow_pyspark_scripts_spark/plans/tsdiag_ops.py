@@ -41,13 +41,10 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
+from ..functions.det import round6
 
 _LAGS = (1, 2, 3, 4, 5, 6, 7)
 _MARKOV_ITERS = 12
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -153,9 +150,9 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         F.col("n").alias("n_days"),
-        _q6(rho(1)).alias("rho_1"),
-        _q6(rho(7)).alias("rho_7"),
-        _q6(q).alias("q_stat"),
+        round6(rho(1)).alias("rho_1"),
+        round6(rho(7)).alias("rho_7"),
+        round6(q).alias("q_stat"),
     )
 
 
@@ -251,8 +248,8 @@ def stats_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shares.select(
         "pattern",
         "cnt",
-        _q6(sh).alias("share"),
-        _q6(
+        round6(sh).alias("share"),
+        round6(
             F.sum(-sh * F.log2(sh)).over(wall) / F.log2(F.lit(6.0))
         ).alias("h_norm"),
     )
@@ -361,6 +358,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pi.join(F.broadcast(er)).select(
         F.col("st").alias("state"),
-        _q6(F.col("pi")).alias("pi"),
-        _q6(F.col("entropy_rate")).alias("entropy_rate"),
+        round6(F.col("pi")).alias("pi"),
+        round6(F.col("entropy_rate")).alias("entropy_rate"),
     )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.sketch import approx_pctl, approx_pctls
-from ..functions.det import mean_grid, mean_grid_sql
+from ..functions.det import mean_grid, mean_grid_sql, round6
 from ..registry import query
 from ..sources import read_table
 
@@ -365,12 +365,11 @@ def text_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.log((F.col("c") + 1.0) / (F.col("big_n") + F.col("vocab") + 1.0))
         ).alias("ll"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return scored.select(
         "n_tokens",
         "n_oov",
-        r6(F.col("n_oov").cast("double") / F.col("n_tokens")).alias("oov_rate"),
-        r6(-F.col("ll") / F.col("n_tokens")).alias("avg_nll"),
+        round6(F.col("n_oov").cast("double") / F.col("n_tokens")).alias("oov_rate"),
+        round6(-F.col("ll") / F.col("n_tokens")).alias("avg_nll"),
         (
             F.floor(F.exp(-F.col("ll") / F.col("n_tokens")) * F.lit(1e4) + F.lit(0.5))
             / F.lit(1e4)
@@ -616,7 +615,7 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("t_u").alias("t_total_u"), F.sum(tb_u).alias("t_between_u")
     )
     r6u = lambda c: (  # noqa: E731
-        F.floor(c.cast("double") / F.lit(1e12) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+        round6(c.cast("double") / F.lit(1e12))
     )
     return parts.select(
         r6u(F.col("t_total_u")).alias("theil_total"),
@@ -672,12 +671,11 @@ def stats_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean = a / (a + b)
     sd = F.sqrt(a * b / ((a + b) * (a + b) * (a + b + 1)))
     z = F.lit(1.959963984540054)
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return d.select(
         "day", "n", "k",
-        r6(mean).alias("posterior_mean"),
-        r6(mean - z * sd).alias("ci_low"),
-        r6(mean + z * sd).alias("ci_high"),
+        round6(mean).alias("posterior_mean"),
+        round6(mean - z * sd).alias("ci_low"),
+        round6(mean + z * sd).alias("ci_high"),
     )
 
 
@@ -820,10 +818,9 @@ def ml_best_threshold_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         score.alias("score"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     deciles = [k / 10.0 for k in range(1, 10)]
-    # ONE sketch queried at all 9 ranks (r9, functions/sketch.approx_pctls)
-    b = base.agg(F.transform(approx_pctls("score", tuple(deciles)), r6).alias("bl"))
+    # ONE sketch queried at all 9 ranks (functions/sketch.approx_pctls)
+    b = base.agg(F.transform(approx_pctls("score", tuple(deciles)), round6).alias("bl"))
     cand = b.select(F.explode("bl").alias("thr"))
     cm = (
         base.crossJoin(F.broadcast(cand))
@@ -834,7 +831,7 @@ def ml_best_threshold_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when((F.col("score") < F.col("thr")) & (F.col("y") == 1), 1).otherwise(0)).alias("fn"),
         )
     )
-    f1 = r6(
+    f1 = round6(
         F.lit(2.0) * F.col("tp") / (F.lit(2.0) * F.col("tp") + F.col("fp") + F.col("fn"))
     )
     return (
@@ -1059,11 +1056,5 @@ def corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_shingles",
         "n_novel",
-        (
-            F.floor(
-                F.col("n_novel").cast("double") / F.col("n_shingles") * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("novelty_rate"),
+        round6(F.col("n_novel").cast("double") / F.col("n_shingles")).alias("novelty_rate"),
     )

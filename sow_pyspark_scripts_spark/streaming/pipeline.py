@@ -30,19 +30,24 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over events.parquet with the ts normalization the batch
     source applies (TIMESTAMP(NANOS) -> long -> microsecond timestamp).
 
-    The fixture is a single file but Spark's file stream source requires
-    a directory to monitor, so the file is exposed through a symlink in a
-    scratch directory (a production deployment points this at the real
-    landing directory and new files just arrive)."""
+    Spark's file stream source monitors a directory. A directory of part
+    files is watched directly (a production deployment points this at
+    the real landing directory and new files just arrive); a single-file
+    table is exposed through a symlink in a scratch directory. The file
+    source lists only the files directly inside the watched directory,
+    so a linked directory would drain nothing."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
-    stream_dir = os.path.join(
-        tempfile.gettempdir(), "spark_stream_src_" + path.strip("/").replace("/", "_")
-    )
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(path, link)
+    stream_dir = path
+    if not os.path.isdir(path):
+        stream_dir = os.path.join(
+            tempfile.gettempdir(),
+            "spark_stream_src_" + path.strip("/").replace("/", "_"),
+        )
+        os.makedirs(stream_dir, exist_ok=True)
+        link = os.path.join(stream_dir, "events.parquet")
+        if not os.path.exists(link):
+            os.symlink(path, link)
     schema = spark.read.parquet(path).schema  # long (nanos) or TIMESTAMP_NTZ
     stream = spark.readStream.schema(schema).parquet(stream_dir)
     from pyspark.sql.types import LongType, TimestampNTZType

@@ -78,3 +78,24 @@ def test_lsh_verified_pairs_subset_of_exact(spark):
     exact_hi = {p for p, j in exact.items() if j >= 0.8}
     lsh_hi = {p for p, j in lsh.items() if j >= 0.8}
     assert exact_hi == lsh_hi
+
+
+def test_stored_pq_codes_equal_in_query_encoding(spark):
+    """The index build and `embedding_pq_encode` encode through the same
+    steps, so the stored pq_codes table must carry the in-query codes and
+    quantization error for every vec_id."""
+    import os
+
+    from sow_pyspark_scripts_spark.plans.ann_index import ensure_ann_index
+
+    idx = ensure_ann_index(spark, SF_DIR)
+    stored = {
+        r["vec_id"]: (f"{r['c0']}|{r['c1']}|{r['c2']}|{r['c3']}", r["qerr"])
+        for r in spark.read.parquet(os.path.join(idx, "pq_codes.parquet")).collect()
+    }
+    encoded = {
+        r["vec_id"]: (r["codes"], r["qerr"])
+        for r in QUERIES["embedding_pq_encode"](spark, SF_DIR).collect()
+    }
+    assert len(encoded) > 0
+    assert stored == encoded, sorted(set(stored.items()) ^ set(encoded.items()))[:5]

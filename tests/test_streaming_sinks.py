@@ -241,3 +241,48 @@ def test_compaction_reduces_file_count(spark):
     n_compact = len(glob.glob(os.path.join(compact, "part-*")))
     assert n_frag == 64 and n_compact <= 2, (n_frag, n_compact)
     assert out.count() == read_table(spark, SF_DIR, "events").count()
+
+
+def test_compaction_sizes_output_through_hadoop_fs(spark, monkeypatch):
+    """sink_compact_small_files must size its output through the Hadoop
+    FileSystem, not driver-local os calls, so HDFS / object-store paths
+    work: local listing of the fragment directory is made to fail."""
+    import os
+
+    from sow_pyspark_scripts_spark.plans.spark4_ops import (
+        sink_compact_small_files,
+    )
+
+    def local_fs_forbidden(fn):
+        def guarded(path, *args, **kwargs):
+            if "spark_compact_frag_" in os.fspath(path):
+                raise OSError(f"driver-local filesystem call on {path}")
+            return fn(path, *args, **kwargs)
+
+        return guarded
+
+    monkeypatch.setattr(os, "listdir", local_fs_forbidden(os.listdir))
+    monkeypatch.setattr(os.path, "getsize", local_fs_forbidden(os.path.getsize))
+    out = sink_compact_small_files(spark, SF_DIR)
+    assert out.count() == read_table(spark, SF_DIR, "events").count()
+
+
+def test_stream_events_drains_directory_of_part_files(spark, tmp_path):
+    """A table stored as a directory of part files drains every event,
+    as the single-file table does."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from sow_pyspark_scripts_spark.streaming.pipeline import stream_events
+
+    table = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    parts = tmp_path / "events.parquet"
+    parts.mkdir()
+    step = -(-table.num_rows // 4)
+    for i in range(4):
+        pq.write_table(
+            table.slice(i * step, step), str(parts / f"part-{i:05d}.parquet")
+        )
+    drained = run_to_memory(stream_events(spark, str(tmp_path)), "append")
+    assert drained.count() == table.num_rows > 0
