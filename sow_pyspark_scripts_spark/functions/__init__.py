@@ -15,7 +15,6 @@ from .text import (
     quality_score,
     token_count,
 )
-from .vectors import cosine_similarity, dot_product, l2_norm, l2_normalize
 
 __all__ = [
     "mean_grid",
@@ -33,8 +32,4 @@ __all__ = [
     "normalize_text",
     "quality_score",
     "token_count",
-    "cosine_similarity",
-    "dot_product",
-    "l2_norm",
-    "l2_normalize",
 ]

@@ -14,15 +14,22 @@ Scale shapes:
   - n-gram Jaccard: shingle-key equi-join (co-occurring shingles only),
     intersection counts vs per-doc sizes. The exact-verify step you run
     AFTER LSH candidate generation at 100 TB, or standalone at small N.
+
+The per-seed, per-band and per-bit expressions are built as Spark SQL
+text, one ``selectExpr``/``F.expr`` per output column: the tree is
+parsed JVM-side in one call, where composing it Column by Column costs
+several Py4J round trips per node — most of the driver's build time of
+the MinHash queries.
 """
 
 from __future__ import annotations
 
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import bit_sum_sql
 from .text import tokenize
 from ..functions.det import round6
 
@@ -51,12 +58,12 @@ def word_shingles(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFra
     set), so the minhash path passes distinct=False and saves the
     dedup shuffle entirely.
 
-    The input spreads to engine parallelism first (guide §2.5, VERDICT
-    r8 task #2): the tokenize+shingle explode is CPU-bound and a
-    single-row-group fixture pins it to one core — the same wall the
-    simhash family fixed in r8. ``spread`` is gated on the input's
-    partition count, so an already-parallel production scan (or a
-    caller that spread upstream) skips the shuffle."""
+    The input spreads to engine parallelism first: the tokenize+shingle
+    explode is CPU-bound and a single-row-group fixture pins it to one
+    core. ``spread`` is gated on the input's plan and partition count,
+    so an already-parallel production scan skips the shuffle; callers
+    therefore pass the plain scan and leave the spread to this
+    function."""
     from ..sources import spread
 
     toks = spread(docs).select("doc_id", tokenize(F.col("text")).alias("t"))
@@ -69,12 +76,10 @@ def shingles_from_tokens(
     """``word_shingles`` from a PRE-TOKENIZED (doc_id, ..., t) relation —
     lets an index build share ONE tokenization pass between the shingle
     and bigram streams (plans/ann_index ``build_doc_index``)."""
-    idx = F.sequence(F.lit(1), F.size("t") - (n - 1))
-    shingle = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(F.col("t"), i + k) for k in range(n)]
-    )
-    out = toks.filter(F.size("t") >= n).select(
-        "doc_id", F.explode(F.transform(idx, shingle)).alias("s")
+    words = ", ".join(f"element_at(t, i + {k})" for k in range(n))
+    out = toks.filter(f"size(t) >= {n}").selectExpr(
+        "doc_id",
+        f"explode(transform(sequence(1, size(t) - {n - 1}), i -> concat_ws(' ', {words}))) AS s",
     )
     return out.distinct() if distinct else out
 
@@ -92,14 +97,10 @@ def minhash_signatures(shingles: DataFrame, num_seeds: int = NUM_SEEDS) -> DataF
     bigint signature row (8 B/seed) shuffles 4x smaller than md5-string
     minima (32 B/seed). Partial (map-side) aggregation still applies to
     every min column."""
-    base = F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long")
-    sh = shingles.select("doc_id", base.alias("h"))
+    sh = shingles.selectExpr("doc_id", "CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT) AS h")
     return sh.groupBy("doc_id").agg(
         *[
-            F.min(
-                (F.col("h") * F.lit(minhash_a(k)) + F.lit(minhash_b(k)))
-                % F.lit(MINHASH_P)
-            ).alias(f"m{k}")
+            F.expr(f"min((h * {minhash_a(k)} + {minhash_b(k)}) % {MINHASH_P}) AS m{k}")
             for k in range(num_seeds)
         ]
     )
@@ -112,22 +113,14 @@ def band_signatures(
     into bands of ``band_size`` minhashes, each band serialized to one
     join key. This relation IS the persisted index in an incremental
     deployment: new batches probe it with an equi-join."""
-    n_bands = num_seeds // band_size
-    band_rows = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(
-                    "|", *[F.col(f"m{b * band_size + k}") for k in range(band_size)]
-                ).alias("bsig"),
-            )
-            for b in range(n_bands)
-        ]
+    rows = ", ".join(
+        f"struct({b} AS band_id, concat_ws('|', "
+        + ", ".join(f"m{b * band_size + k}" for k in range(band_size))
+        + ") AS bsig)"
+        for b in range(num_seeds // band_size)
     )
-    return signatures.select("doc_id", F.explode(band_rows).alias("band")).select(
-        "doc_id",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.bsig").alias("bsig"),
+    return signatures.selectExpr("doc_id", f"explode(array({rows})) AS band").selectExpr(
+        "doc_id", "band.band_id AS band_id", "band.bsig AS bsig"
     )
 
 
@@ -182,7 +175,7 @@ def lsh_verified_jaccard_pairs(
     only the verify stage, and only over candidate docs (the semi-join
     below), not the corpus — the stored-split precedent of
     `dedup_minhash_incremental_stored` applied to the cluster
-    composites (VERDICT r3 #3)."""
+    composites."""
     if candidates is None:
         cand = lsh_candidate_pairs(
             minhash_signatures(word_shingles(docs, distinct=False))
@@ -223,20 +216,16 @@ def lsh_verified_jaccard_pairs(
     return j.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
 
 
-def _nibble(h: Column, j: int) -> Column:
-    """Value 0-15 of hex char j (0-based) of an md5 string — computed via
-    instr on the hex alphabet so Spark and the SQL oracle agree exactly."""
-    return (F.instr(F.lit(_HEX), F.substring(h, j + 1, 1)) - 1).cast("int")
-
-
 def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """16-bit SimHash per doc from distinct-token md5s.
 
     For bit b (hex char b//4, bit b%4 of that nibble): tokens vote +1 if
     the bit is set else -1; the simhash sets bit b where the vote sum is
     positive. Pure integer arithmetic -> identical in the SQL oracle.
+    The nibble is read via instr on the hex alphabet so Spark and the
+    SQL oracle agree exactly.
 
-    The input spreads to engine parallelism first (guide §2.5): the
+    The input spreads to engine parallelism first: the
     tokenize+explode+md5 vote pass is CPU-bound, and a single-row-group
     fixture (or one fat landing file at scale) pins it to one core —
     measured as a single 5.0s task inside dedup_simhash_hamming at
@@ -251,24 +240,16 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
         .distinct()
         .select("doc_id", F.md5("tok").alias("h"))
     )
+    nibble = lambda j: f"CAST(instr('{_HEX}', substring(h, {j + 1}, 1)) - 1 AS INT)"  # noqa: E731
     votes = toks.groupBy("doc_id").agg(
         *[
-            F.sum(
-                (
-                    F.floor(_nibble(F.col("h"), b // 4) / F.lit(2 ** (b % 4))).cast("int")
-                    % 2
-                )
-                * 2
-                - 1
-            ).alias(f"v{b}")
+            F.expr(
+                f"sum((CAST(floor({nibble(b // 4)} / {2 ** (b % 4)}) AS INT) % 2) * 2 - 1) AS v{b}"
+            )
             for b in range(bits)
         ]
     )
-    sim = None
-    for b in range(bits):
-        term = F.when(F.col(f"v{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return votes.select("doc_id", sim.cast("long").alias("simhash"))
+    return votes.selectExpr("doc_id", f"{bit_sum_sql([f'v{b}' for b in range(bits)])} AS simhash")
 
 
 def jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:

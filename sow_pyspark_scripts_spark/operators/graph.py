@@ -18,7 +18,7 @@ here), exactly how large-star/small-star implementations structure it.
 
 from __future__ import annotations
 
-from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
+from ..functions.pin import pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,19 +39,22 @@ def connected_components(
     sym = edges.selectExpr("src", "dst").union(edges.selectExpr("dst as src", "src as dst"))
     sym = sym.persist()
     labels = vertices.select(F.col(id_col).alias("v"), F.col(id_col).alias("lbl")).persist()
+    # the frame that holds this iteration's input labels in cache; from
+    # iteration 2 on ``labels`` is a projection of it, so releasing
+    # ``labels`` itself would leave every pinned frame cached
+    pinned = labels
     for _ in range(MAX_ITERATIONS):
         neighbor_min = (
             sym.join(labels, sym.dst == labels.v)
             .groupBy("src")
             .agg(F.min("lbl").alias("nlbl"))
         )
-        # The convergence flag rides INSIDE the pinned pass (r9, guide
-        # §2.4/§5): labels only ever decrease, so changed == "any new
-        # label < old label" — computed as a column in the same select,
-        # then checked with a cheap scan of the just-materialized pin.
-        # The old shape re-joined new labels to old labels for the
-        # check: one extra join + shuffle per iteration, on every
-        # cluster composite that calls this operator.
+        # The convergence flag rides INSIDE the pinned pass: labels only
+        # ever decrease, so changed == "any new label < old label" —
+        # computed as a column in the same select, then checked with a
+        # cheap scan of the just-materialized pin. Re-joining new labels
+        # to old labels for the check would cost one extra join +
+        # shuffle per iteration.
         new_lbl = F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl")))
         new_labels = (
             labels.join(neighbor_min, labels.v == neighbor_min.src, "left")
@@ -63,7 +66,8 @@ def connected_components(
             .transform(_pin_eager)  # cut lineage: each iteration starts from materialized labels
         )
         changed = new_labels.where(F.col("chg")).limit(1).count()
-        labels.unpersist()
+        pinned.unpersist()
+        pinned = new_labels
         labels = new_labels.select("v", F.col("nl").alias("lbl"))
         if changed == 0:
             break

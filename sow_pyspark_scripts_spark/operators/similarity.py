@@ -12,56 +12,51 @@ Two paths, per SURVEY.md §7 phase 4:
     runs/engines — at 1000 executors everyone agrees on buckets with
     zero coordination).
 
-Similarities are EXACT-INTEGER grid cosines (r5): components quantize
-to the 1e-6 grid, dot and norm² sums run as integers (associative — any
+Similarities are EXACT-INTEGER grid cosines: components quantize to the
+1e-6 grid, dot and norm² sums run as integers (associative — any
 partial-aggregate merge order, any oracle thread count), one double
 division, one half-up 6dp floor before ranking. Rank order is therefore
 bit-identical across engines BY CONSTRUCTION, not by accepted ulp risk
-(the pre-r5 dim-sequential float form assumed DuckDB sums unnested rows
-in subscript order, which parallel scans do not guarantee — the r3/r4
-semdedup driver-flake class).
+(a dim-sequential float form would assume DuckDB sums unnested rows in
+subscript order, which parallel scans do not guarantee).
+
+The per-column expressions (grid quantization, norms, plane
+projections, bucket bits) are built as Spark SQL text, one
+``selectExpr``/``F.expr`` per output column: the tree is parsed JVM-side
+in one call instead of paying several Py4J round trips per node.
 """
 
 from __future__ import annotations
 
-from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
+from ..functions.pin import pin_eager as _pin_eager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.gridnp import guarded_pair_sims
-from ..functions.vectors import (
-    dot_grid,
-    dot_grid_pre,
-    dot_product,
-    l2_norm,
-    norm2_grid,
-    quant_arr,
-)
-from ..functions.det import round6
+from ..functions.vectors import cos_grid_pre, norm2_pre, quant_arr, quant_sql
+from .relational import top_n_per_group
 
 NUM_PLANES = 4
 
 
-def _norm2_pre(aq: Column) -> Column:
-    """Exact integer norm² for an array already in grid units."""
-    return F.aggregate(aq, F.lit(0).cast("long"), lambda acc, x: acc + x * x)
+def grid_side(
+    df: DataFrame, side: str, *extra: str, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """One side of a grid-cosine join: (<side>id, <side>e, *extra,
+    <side>n2) — vectors quantized to grid units once per side, with
+    their exact integer norm², so per-pair work is one integer dot."""
+    return df.selectExpr(
+        f"{id_col} AS {side}id", f"{quant_arr(vec_col)} AS {side}e", *extra
+    ).withColumn(f"{side}n2", F.expr(norm2_pre(f"{side}e")))
 
 
-def _sim_grid(qe: Column, ce: Column, qn2: Column, cn2: Column) -> Column:
-    """Rounded cosine from an exact integer dot and PRECOMPUTED exact
-    integer norm² columns — the join-friendly form of
-    ``functions.vectors.cos_grid`` (norms computed once per side, not
-    once per pair). Bit-identical to the oracle's ``cos_grid_sql``
-    under any partitioning or thread count. ``qe``/``ce`` must be
-    PRE-QUANTIZED grid-unit arrays (``quant_arr`` once per side before
-    the join — per-pair re-quantization costs ~2x on bucket joins)."""
-    return (
-        round6(
-            dot_grid_pre(qe, ce).cast("double")
-            / (F.sqrt(qn2.cast("double")) * F.sqrt(cn2.cast("double")))
-        )
-    )
+def grid_pair_topk(pairs: DataFrame, k: int, *keep: str) -> DataFrame:
+    """Score (qid, cid) pairs of two ``grid_side`` relations by rounded
+    grid cosine and keep each query's top ``k`` (sim desc, cid
+    tie-break)."""
+    sims = pairs.select("qid", "cid", *keep, cos_grid_pre("qe", "ce", "qn2", "cn2").alias("sim"))
+    return top_n_per_group(sims, ["qid"], [F.col("sim").desc(), F.col("cid")], k, "rank")
 
 
 def topk_exact(
@@ -69,34 +64,20 @@ def topk_exact(
 ) -> DataFrame:
     """Brute-force cosine top-k: broadcast the (small) query set against
     all candidates; rank by rounded sim desc with id tiebreak."""
-    cand = emb.select(
-        F.col(id_col).alias("cid"), quant_arr(F.col(vec_col)).alias("ce")
-    ).withColumn("cn2", _norm2_pre(F.col("ce")))
-    q = emb.filter(query_pred).select(
-        F.col(id_col).alias("qid"), quant_arr(F.col(vec_col)).alias("qe")
-    ).withColumn("qn2", _norm2_pre(F.col("qe")))
+    cand = grid_side(emb, "c", id_col=id_col, vec_col=vec_col)
+    q = grid_side(emb.filter(query_pred), "q", id_col=id_col, vec_col=vec_col)
     pairs = cand.crossJoin(F.broadcast(q)).filter(F.col("qid") != F.col("cid"))
-    sims = pairs.select(
-        "qid",
-        "cid",
-        _sim_grid(F.col("qe"), F.col("ce"), F.col("qn2"), F.col("cn2")).alias("sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return grid_pair_topk(pairs, k)
 
 
 # Deterministic integer hyperplane family. A plane is the coefficient
 # vector coef(i) = ((i*s + o) % 7) - 3 over 1-based dims i; its CLASS is
 # (s mod 7, o mod 7), and two planes with the same class are IDENTICAL.
-# The pre-r5 formula ((i*31 + j*17) % 7) fixed s=31 (≡3) for every j, so
-# the whole family had only SEVEN distinct planes — "independent" bands
-# and the sharded-semdedup second family silently shared hyperplanes
-# (ADVICE r4). The fix: planes 0..3 keep their legacy classes (so every
-# existing SRP bucketing and its oracles are value-identical), and planes
-# 4+ enumerate the remaining (s, o) classes with s != 0 — 42 genuinely
+# The original formula ((i*31 + j*17) % 7) fixed s=31 (≡3) for every j,
+# so it had only SEVEN distinct planes and "independent" bands silently
+# shared hyperplanes. Planes 0..3 keep those classes (so every existing
+# SRP bucketing and its oracles are value-identical), and planes 4+
+# enumerate the remaining (s, o) classes with s != 0 — 42 genuinely
 # distinct planes total. Beyond 41 the mod-7 integer family is exhausted
 # by construction; raise rather than silently repeat (a wider family
 # needs a larger modulus, e.g. mod-11 weights in [-5, 5]).
@@ -123,20 +104,18 @@ def plane_class(plane: int) -> tuple[int, int]:
 
 
 def plane_coef_sql(var: str, plane: int) -> str:
-    """DuckDB fragment for the plane's coefficient at 1-based dim ``var``
-    — shared by every oracle that replicates a bucketing, so engine and
-    oracle can never disagree on the hyperplanes."""
+    """The plane's INTEGER coefficient in [-3, 3] at 1-based dim
+    ``var``, as SQL text valid in both Spark and DuckDB — the engine's
+    bucketing and every oracle that replicates it use this one
+    fragment, so they can never disagree on the hyperplanes."""
     s, o = plane_class(plane)
     return f"((({var} * {s} + {o}) % 7) - 3)"
 
 
-def _plane_coef(pos_1based: Column, plane: int) -> Column:
-    """Deterministic pseudo-random hyperplane coefficient in [-3, 3] for
-    dim i (1-based): ((i*s + o) % 7) - 3 with (s, o) = plane_class(j).
-    INTEGER-valued (callers multiply against grid-quantized components
-    for exact integer projections)."""
-    s, o = plane_class(plane)
-    return (pos_1based * s + F.lit(o)) % 7 - 3
+def bit_sum_sql(cols: list[str]) -> str:
+    """BIGINT with bit j set where ``cols[j] > 0``."""
+    terms = " + ".join(f"CASE WHEN {c} > 0 THEN {2**j} ELSE 0 END" for j, c in enumerate(cols))
+    return f"CAST({terms} AS BIGINT)"
 
 
 def srp_buckets(
@@ -157,61 +136,35 @@ def srp_buckets(
     exactly the classic bucketing; see ``plane_class`` for the family's
     42-plane ceiling).
 
-    Projections are EXACT integer sums (r5): components quantize to the
-    1e-6 grid, multiply integer plane weights, and sum as longs — the
-    sign test can never flip with Spark's partial-aggregate merge order
-    or the oracle's thread count (the semdedup-flake class, closed at
-    the source).
+    Projections are EXACT integer sums: components quantize to the 1e-6
+    grid, multiply integer plane weights, and sum as longs — the sign
+    test can never flip with Spark's partial-aggregate merge order or
+    the oracle's thread count.
     """
-    flat = emb.select(
-        F.col(id_col).alias("vec_id"), F.posexplode(F.col(vec_col)).alias("pos", "val")
-    ).select(
-        "vec_id",
-        (F.col("pos") + 1).alias("i"),
-        F.floor(F.col("val").cast("double") * F.lit(1e6) + F.lit(0.5))
-        .cast("long")
-        .alias("qv"),
-    )
+    flat = emb.selectExpr(
+        f"{id_col} AS vec_id", f"posexplode({vec_col}) AS (pos, val)"
+    ).selectExpr("vec_id", "pos + 1 AS i", f"{quant_sql('val')} AS qv")
     projs = flat.groupBy("vec_id").agg(
         *[
-            F.sum(F.col("qv") * _plane_coef(F.col("i"), plane_offset + j)).alias(f"p{j}")
+            F.expr(f"sum(qv * {plane_coef_sql('i', plane_offset + j)}) AS p{j}")
             for j in range(num_planes)
         ]
     )
-    bucket = None
-    for j in range(num_planes):
-        term = F.when(F.col(f"p{j}") > 0, F.lit(2**j)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
-    return projs.select("vec_id", bucket.cast("long").alias("bucket"))
+    bucket = bit_sum_sql([f"p{j}" for j in range(num_planes)])
+    return projs.selectExpr("vec_id", f"{bucket} AS bucket")
 
 
 def topk_lsh(
     emb: DataFrame, query_pred: Column, k: int = 5, num_planes: int = NUM_PLANES
 ) -> DataFrame:
     """LSH-bucketed cosine top-k: score only same-bucket candidates."""
-    buckets = srp_buckets(emb, num_planes)
-    with_b = emb.join(buckets, "vec_id")
-    cand = with_b.select(
-        F.col("vec_id").alias("cid"), quant_arr(F.col("embedding")).alias("ce"), F.col("bucket")
-    ).withColumn("cn2", _norm2_pre(F.col("ce")))
-    q = with_b.filter(query_pred).select(
-        F.col("vec_id").alias("qid"), quant_arr(F.col("embedding")).alias("qe"),
-        F.col("bucket").alias("qbucket"),
-    ).withColumn("qn2", _norm2_pre(F.col("qe")))
+    with_b = emb.join(srp_buckets(emb, num_planes), "vec_id")
+    cand = grid_side(with_b, "c", "bucket")
+    q = grid_side(with_b.filter(query_pred), "q", "bucket AS qbucket")
     pairs = cand.join(
         F.broadcast(q), (F.col("bucket") == F.col("qbucket")) & (F.col("qid") != F.col("cid"))
     )
-    sims = pairs.select(
-        "qid",
-        "cid",
-        F.col("bucket"),
-        _sim_grid(F.col("qe"), F.col("ce"), F.col("qn2"), F.col("cn2")).alias("sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return grid_pair_topk(pairs, k, "bucket")
 
 
 def ivf_cells(emb: DataFrame, centroid_col: str = "label") -> tuple[DataFrame, DataFrame]:
@@ -226,8 +179,7 @@ def ivf_cells(emb: DataFrame, centroid_col: str = "label") -> tuple[DataFrame, D
     1e-6 grid via an exact-integer mean (``functions.det.mean_grid``):
     a raw ``avg(double)`` varies at the ulp level with Spark's
     partial-aggregate merge order, which once flipped a d2 sitting on a
-    rounding boundary and changed a cell assignment between runs (the
-    round-3 ``dedup_semantic_semdedup`` driver flake). With grid-exact
+    rounding boundary and changed a cell assignment between runs. With grid-exact
     centroids the whole assignment is partitioning-independent.
     """
     from ..functions.det import mean_grid
@@ -248,10 +200,10 @@ def ivf_cells(emb: DataFrame, centroid_col: str = "label") -> tuple[DataFrame, D
     # |vectors| x |centroids| grid of 64-term Catalyst expressions
     # (~1.3e9 scalar ops at 200k vectors — the dominant cost of the kNN
     # battery entry at 100x). The squared distance is an EXACT INTEGER
-    # on the 1e-6 grid (r5): vectors and (grid-pinned) centroids quantize
+    # on the 1e-6 grid: vectors and (grid-pinned) centroids quantize
     # to int64, d2 = |x|² + |c|² - 2x·c in integer arithmetic — identical
     # under any accumulation order, any engine, any thread count (the
-    # pre-r5 dim-sequential float form assumed DuckDB sums unnested rows
+    # a dim-sequential float form would assume DuckDB sums unnested rows
     # in subscript order, which parallel scans do not guarantee — the
     # semdedup-flake class). Ties break to the lowest cent_id exactly
     # like ORDER BY d2, cent_id; exact integers mean "tie" is true
@@ -306,27 +258,12 @@ def topk_ivf(emb: DataFrame, query_pred: Column, k: int = 5) -> DataFrame:
     touches 1/n_cells of the data; recall is traded via nprobe."""
     _, cells = ivf_cells(emb)
     with_c = emb.join(cells, "vec_id")
-    cand = with_c.select(
-        F.col("vec_id").alias("cid"), quant_arr(F.col("embedding")).alias("ce"), "cell"
-    ).withColumn("cn2", _norm2_pre(F.col("ce")))
-    q = with_c.filter(query_pred).select(
-        F.col("vec_id").alias("qid"), quant_arr(F.col("embedding")).alias("qe"),
-        F.col("cell").alias("qcell"),
-    ).withColumn("qn2", _norm2_pre(F.col("qe")))
+    cand = grid_side(with_c, "c", "cell")
+    q = grid_side(with_c.filter(query_pred), "q", "cell AS qcell")
     pairs = cand.join(
         F.broadcast(q), (F.col("cell") == F.col("qcell")) & (F.col("qid") != F.col("cid"))
     )
-    sims = pairs.select(
-        "qid",
-        "cid",
-        F.col("cell"),
-        _sim_grid(F.col("qe"), F.col("ce"), F.col("qn2"), F.col("cn2")).alias("sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return grid_pair_topk(pairs, k, "cell")
 
 
 def cosine_neardup_bucketed(emb: DataFrame, threshold: float) -> DataFrame:
@@ -345,7 +282,7 @@ def cosine_neardup_bucketed(emb: DataFrame, threshold: float) -> DataFrame:
     itself in 1024-row chunks (bounds the sims block regardless of bucket
     size) and only threshold-passing (va < vb) pairs ever become rows.
 
-    Determinism (r5, exact-integer form), at GEMM speed: a float BLAS
+    Determinism (exact-integer form), at GEMM speed: a float BLAS
     prefilter over the normalized QUANTIZED vectors finds candidate
     pairs with margin (threshold - 1e-5 >> the ~1e-13 BLAS reassociation
     error — prefilter and exact stage share the same grid-quantized
@@ -357,7 +294,7 @@ def cosine_neardup_bucketed(emb: DataFrame, threshold: float) -> DataFrame:
     only the ~0.2% inside the band pay the int64 gather + exact integer
     dot/norm² rescore. The result is bit-identical to the oracle's
     ``cos_grid_sql`` under ANY thread count or partitioning — the
-    rounded-boundary flake class (r3/r4 semdedup) cannot occur — while
+    rounded-boundary flake class cannot occur — while
     an output-bound query (26.9M pairs at threshold 0.3 / 100x) keeps
     GEMM cost instead of paying the measured ~1.6x int64 overhead per
     survivor. The full-matrix work stays one cache-blocked GEMM instead
@@ -441,10 +378,10 @@ def cosine_neardup_banded(
     near-dup threshold, 4 planes x 1 band keeps ~46% of true pairs, 4x4
     keeps ~92%; cost scales with B * Σ(bucket²). This is the bounded-
     recall fallback ``cosine_neardup_pairs`` uses past its broadcast
-    limit (ADVICE r2: the single-band fallback silently halved recall).
+    limit (a single-band fallback would silently halve recall).
 
-    Sims are identical across bands (same exact-integer grid arithmetic,
-    r5), so the cross-band dropDuplicates is deterministic."""
+    Sims are identical across bands (same exact-integer grid
+    arithmetic), so the cross-band dropDuplicates is deterministic."""
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     bands = None
@@ -476,7 +413,7 @@ def cosine_neardup_banded(
             return empty
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-        qm = np.floor(mat * 1e6 + 0.5).astype(np.int64)  # exact grid ints (r5)
+        qm = np.floor(mat * 1e6 + 0.5).astype(np.int64)  # exact grid ints
         sqn = np.sqrt((qm * qm).sum(axis=1).astype(np.float64))
         g = np.where(sqn == 0.0, 1.0, sqn)
         matn = qm / g[:, None]  # prefilter only (both in grid units)
@@ -519,7 +456,7 @@ def _collect_matrix(emb: DataFrame):
     """Arrow-collect a SIZE-CHECKED (vec_id, embedding) projection into
     (ids, GRID-QUANTIZED int64 matrix, exact-integer L2 norms). Callers
     must bound the input BEFORE calling (count or filter) — this helper
-    never decides size. The quantized matrix is the r5 determinism
+    never decides size. The quantized matrix is the determinism
     contract: every emitted sim derives from exact integer dot/norm²
     sums (functions/det.py doctrine), so no accumulation-order or
     engine-thread effect can flip a rounded compare. Norms are
@@ -564,7 +501,7 @@ def cosine_neardup_pairs(
     materialization, per-bucket chunked kernels, work ∝ B*Σ(bucket²),
     candidate recall 1-(1-p^4)^4 ≈ 92% at threshold 0.85 (p =
     1-acos(s)/pi). Without the flag the size gate raises instead of
-    silently degrading recall (ADVICE r2). The gate is a JVM-side count
+    silently degrading recall. The gate is a JVM-side count
     of a pruned projection; the embedding column never reaches the
     driver unless it fits the broadcast bound.
     """
@@ -635,7 +572,7 @@ def _knn_gemm_topk(emb: DataFrame, bc, k: int) -> DataFrame:
     broadcast once its results materialize). Emitted sims/ranks come
     from an exact dim-sequential recompute of the safety band around
     the k-th-largest GEMM sim (oracle FP sequence at GEMM cost —
-    ADVICE r2; see `cosine_neardup_bucketed` for the margin math)."""
+    see `cosine_neardup_bucketed` for the margin math)."""
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     kk = int(k)
@@ -707,9 +644,8 @@ def knn_loo_neighbors(
     result no longer references the broadcast), and the shard broadcast
     is DESTROYED before the next one is built — at any moment the driver
     holds one shard matrix and the executors cache one live shard
-    broadcast, which is the bound the r2 ADVICE showed the lazy union
-    plan violated (all shards' broadcasts stayed referenced until the
-    final action). A final window rank merges the unioned per-shard
+    broadcast, a bound a lazy union plan would violate (all shards'
+    broadcasts stay referenced until the final action). A final window rank merges the unioned per-shard
     winners (global top-k ⊆ union of shard top-k, so the merge is
     lossless). The size gate is a JVM-side count — no unchecked
     full-column toPandas()."""
@@ -737,7 +673,7 @@ def knn_loo_neighbors(
             # recomputes from lineage, which needs the broadcast VALUE.
             # unpersist frees executor copies but keeps the driver-side
             # value available for re-broadcast on recompute; destroy()
-            # would make the loss unrecoverable (ADVICE r3).
+            # would make the loss unrecoverable.
             bc.unpersist(blocking=True)
     merged = per_shard[0]
     for df in per_shard[1:]:
@@ -801,7 +737,7 @@ def probes_from_centroids(
             return
         c = np.asarray(cent_mat, dtype=np.float64)
         cid = np.asarray(cent_ids, dtype=np.int64)
-        cq = np.floor(c * 1e6 + 0.5).astype(np.int64)  # exact grid ints (r5)
+        cq = np.floor(c * 1e6 + 0.5).astype(np.int64)  # exact grid ints
         cn2 = (cq * cq).sum(axis=1)
         k = min(np_probe, len(cid))
         for pdf in batches:

@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from ..functions.det import d2_grid_sql, d2r6_grid_sql, round6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 from ..registry import query
-from ..sources import read_table
+from ..sources import read_parquet, read_table
 from .pq_common import (
     IVF_KEYS,
     PQ_KEYS,
@@ -112,7 +112,7 @@ def _path(idx: str, table: str) -> str:
 
 
 def _read(spark: SparkSession, idx: str, table: str) -> DataFrame:
-    return spark.read.parquet(_path(idx, table))
+    return read_parquet(spark, _path(idx, table))
 
 
 def _index_root() -> str:
@@ -356,7 +356,7 @@ def stored_all_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus band rows from the stored doc index (built/refreshed
     via the content fingerprint if absent or stale)."""
     idx = ensure_doc_index(spark, sf_dir)
-    return spark.read.parquet(os.path.join(idx, "minhash_all_bands.parquet"))
+    return _read(spark, idx, "minhash_all_bands")
 
 
 def ensure_doc_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
@@ -375,8 +375,8 @@ def stored_dsir_tables(
     back to in-query scoring with a warning)."""
     idx = ensure_doc_index(spark, sf_dir)
     return (
-        spark.read.parquet(os.path.join(idx, "dsir_doc_buckets.parquet")),
-        spark.read.parquet(os.path.join(idx, "dsir_bucket_lr.parquet")),
+        _read(spark, idx, "dsir_doc_buckets"),
+        _read(spark, idx, "dsir_bucket_lr"),
     )
 
 
@@ -673,7 +673,7 @@ def dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents, proving the persisted index is exactly the deterministic
     16-seed/8-band signature relation."""
     idx = ensure_doc_index(spark, sf_dir, rebuild=True)
-    bands = spark.read.parquet(os.path.join(idx, "minhash_base_bands.parquet"))
+    bands = _read(spark, idx, "minhash_base_bands")
     return bands.groupBy("band_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("bsig").alias("n_sigs"),
@@ -691,15 +691,12 @@ def dedup_minhash_incremental_stored(spark: SparkSession, sf_dir: str) -> DataFr
     all). Work per day = |delta bands| probes of the index; identical
     results, same oracle."""
     from ..operators.dedup import band_signatures, minhash_signatures, word_shingles
-    from ..sources import spread
 
     idx = ensure_doc_index(spark, sf_dir)
-    base = spark.read.parquet(
-        os.path.join(idx, "minhash_base_bands.parquet")
-    ).select(F.col("doc_id").alias("dup_of"), "band_id", "bsig")
-    delta_docs = spread(read_table(spark, sf_dir, "documents")).where(
-        F.col("doc_id") % 10 == 0
+    base = _read(spark, idx, "minhash_base_bands").select(
+        F.col("doc_id").alias("dup_of"), "band_id", "bsig"
     )
+    delta_docs = read_table(spark, sf_dir, "documents").where(F.col("doc_id") % 10 == 0)
     delta = band_signatures(
         minhash_signatures(word_shingles(delta_docs, distinct=False))
     ).select(F.col("doc_id").alias("new_doc"), "band_id", "bsig")
@@ -736,9 +733,9 @@ def streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import band_signatures, minhash_signatures, word_shingles
 
     idx = ensure_doc_index(spark, sf_dir)
-    base = spark.read.parquet(
-        os.path.join(idx, "minhash_base_bands.parquet")
-    ).select(F.col("doc_id").alias("dup_of"), "band_id", "bsig")
+    base = _read(spark, idx, "minhash_base_bands").select(
+        F.col("doc_id").alias("dup_of"), "band_id", "bsig"
+    )
 
     src_dir, out_dir, chk_dir = stage_delta_stream(
         spark, sf_dir, "spark_stream_delta"

@@ -37,7 +37,6 @@ from ..operators.dedup import (
 from ..registry import query
 from .sql_common import SHINGLES_CTE as _SHINGLES_CTE
 from ..sources import read_table
-from ..sources.parquet import spread
 from ..functions.det import round6
 
 
@@ -244,7 +243,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — no candidate self-join is materialized for any
     layout. Integer pair counts are engine-exact.
     """
-    docs = spread(read_table(spark, sf_dir, "documents"))
+    docs = read_table(spark, sf_dir, "documents")
     sig = minhash_signatures(word_shingles(docs, distinct=True))
     band_rows = F.array(
         *[

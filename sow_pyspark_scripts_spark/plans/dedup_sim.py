@@ -102,7 +102,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus exactly once (delta hashes 10%, base 90%) — verified in the
     formatted plan. A real deployment reads the base side from the
     stored band index and hashes only the delta."""
-    docs = spread(read_table(spark, sf_dir, "documents"))
+    docs = read_table(spark, sf_dir, "documents")
     from ..operators.dedup import band_signatures
 
     bands = band_signatures(minhash_signatures(word_shingles(docs, distinct=False)))
@@ -120,10 +120,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates: shingle -> 16 md5-minhashes ->
     8 bands of 2 -> band-signature self-join. No pairwise work outside
     band collisions."""
-    # spread: the 16-seed md5 over ~100 shingles/doc is the one map stage
-    # heavy enough that splitting the single-row-group input wins (A/B:
-    # 2.5x at sf0.1); the other doc queries are scan-bound and skip it.
-    docs = spread(read_table(spark, sf_dir, "documents"))
+    # word_shingles spreads the scan: the 16-seed md5 over ~100
+    # shingles/doc is heavy enough that splitting the single-row-group
+    # input wins (A/B: 2.5x at sf0.1)
+    docs = read_table(spark, sf_dir, "documents")
     return lsh_candidate_pairs(minhash_signatures(word_shingles(docs, distinct=False)))
 
 
@@ -499,7 +499,7 @@ def corpus_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell",
         )
         .select(
-            "cell", "vec_id", d2r6_grid(F.col("e"), F.col("centroid")).alias("d2")
+            "cell", "vec_id", F.expr(d2r6_grid("e", "centroid")).alias("d2")
         )
     )
     w = Window.partitionBy("cell").orderBy("d2", "vec_id")
@@ -1004,30 +1004,19 @@ def similarity_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from ..functions.vectors import quant_arr
-    from ..operators.similarity import _norm2_pre, _sim_grid
+    from ..functions.vectors import cos_grid_pre
+    from ..operators.similarity import grid_side
 
     emb = read_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 10 != 0)
     delta = emb.filter(F.col("vec_id") % 10 == 0)
-    queries = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), quant_arr(F.col("embedding")).alias("qe")
-    ).withColumn("qn2", _norm2_pre(F.col("qe")))
+    queries = grid_side(emb.filter(F.col("vec_id") < 20), "q")
 
     def sims_against(cand):
-        c = cand.select(
-            F.col("vec_id").alias("cid"), quant_arr(F.col("embedding")).alias("ce")
-        ).withColumn("cn2", _norm2_pre(F.col("ce")))
-        pairs = c.crossJoin(F.broadcast(queries)).filter(
+        pairs = grid_side(cand, "c").crossJoin(F.broadcast(queries)).filter(
             F.col("qid") != F.col("cid")
         )
-        return pairs.select(
-            "qid",
-            "cid",
-            _sim_grid(
-                F.col("qe"), F.col("ce"), F.col("qn2"), F.col("cn2")
-            ).alias("sim"),
-        )
+        return pairs.select("qid", "cid", cos_grid_pre("qe", "ce", "qn2", "cn2").alias("sim"))
 
     w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
     base_topk = (

@@ -641,7 +641,7 @@ def refine_top5(short: DataFrame, emb: DataFrame) -> DataFrame:
         F.broadcast(short.select("qid", "cid"))
         .join(_vectors(emb, "qid", "qe"), "qid")
         .join(_vectors(emb, "cid", "ce"), "cid")
-        .select("qid", "cid", d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"))
+        .selectExpr("qid", "cid", f"{d2r6_grid('qe', 'ce')} AS d2")
     )
     return top_n_per_group(
         ex, ["qid"], [F.col("d2"), F.col("cid")], 5, "rank"
@@ -658,7 +658,7 @@ def recall_at_5(a5: DataFrame, emb: DataFrame) -> DataFrame:
         _vectors(emb, "cid", "ce")
         .crossJoin(F.broadcast(q))
         .where(F.col("qid") != F.col("cid"))
-        .select("qid", "cid", d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"))
+        .selectExpr("qid", "cid", f"{d2r6_grid('qe', 'ce')} AS d2")
     )
     ex5 = top_n_per_group(d2, ["qid"], [F.col("d2"), F.col("cid")], 5)
     hits = (

@@ -184,45 +184,18 @@ def similarity_topk_ivf_multiprobe(
     Same rounded-cosine ranking discipline (1e-6 floor, id
     tie-break).
     """
-    from ..functions.vectors import quant_arr
-    from ..operators.similarity import _norm2_pre, _sim_grid, ivf_cells_multi
+    from ..operators.similarity import grid_pair_topk, grid_side, ivf_cells_multi
 
     emb = read_table(spark, sf_dir, "embeddings")
     _, probes = ivf_cells_multi(emb, nprobe=2)
     home = probes.where(F.col("probe_rank") == 1).select("vec_id", "cell")
-    cand = (
-        emb.join(home, "vec_id")
-        .select(
-            F.col("vec_id").alias("cid"),
-            quant_arr(F.col("embedding")).alias("ce"),
-            "cell",
-        )
-        .withColumn("cn2", _norm2_pre(F.col("ce")))
-    )
-    q = (
-        emb.where(F.col("vec_id") < 20)
-        .join(probes, "vec_id")
-        .select(
-            F.col("vec_id").alias("qid"),
-            quant_arr(F.col("embedding")).alias("qe"),
-            F.col("cell").alias("qcell"),
-        )
-        .withColumn("qn2", _norm2_pre(F.col("qe")))
-    )
+    cand = grid_side(emb.join(home, "vec_id"), "c", "cell")
+    q = grid_side(emb.where(F.col("vec_id") < 20).join(probes, "vec_id"), "q", "cell AS qcell")
     pairs = cand.join(
         F.broadcast(q),
         (F.col("cell") == F.col("qcell")) & (F.col("qid") != F.col("cid")),
     )
-    sims = pairs.select(
-        "qid",
-        "cid",
-        _sim_grid(F.col("qe"), F.col("ce"), F.col("qn2"), F.col("cn2")).alias("sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-    )
+    return grid_pair_topk(pairs, 5)
 
 
 # ---------------------------------------------------------------------------

@@ -25,6 +25,17 @@ PINNED_NOW = "2002-06-01 00:00:00"
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: half the host's physical memory, at most
+    32 GB. local[N] runs all N task threads inside the driver JVM, so the
+    heap is sized for N concurrent tasks' execution memory, not for a
+    thin cluster driver (8g across 32 threads = ~100 MB/task -> GC
+    thrash and shuffle spill by the tail of a long bench run) — but a
+    fixed 32g would promise more heap than a smaller host has."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 32 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "sow_pyspark_scripts_spark",
     master: str | None = None,
@@ -55,7 +66,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r8 (guide §2.2/§2.5): AQE's coalescing floor
+        # AQE's coalescing floor
         # (minPartitionSize, default 1 MB) is sized for I/O-bound
         # shuffles; on compute-heavy small-byte relations (crypto-hash
         # vote aggregates, banded-DP verify, pair generation over
@@ -77,11 +88,10 @@ def get_spark(
         # layer (sources/parquet.py)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local[N] runs all N task threads inside the driver JVM: size the
-        # heap for N concurrent tasks' execution memory, not for a thin
-        # cluster driver (8g across 32 threads = ~100 MB/task -> GC thrash
-        # and shuffle spill by the tail of a long bench run)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

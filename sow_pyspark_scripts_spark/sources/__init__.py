@@ -1,4 +1,12 @@
-from .parquet import TABLES, read_table, read_tables, register_tables, spread
+from .parquet import (
+    TABLES,
+    parquet_schema,
+    read_parquet,
+    read_table,
+    read_tables,
+    register_tables,
+    spread,
+)
 from .writers import (
     SchemaContractError,
     assert_schema_contract,
@@ -8,6 +16,8 @@ from .writers import (
 
 __all__ = [
     "TABLES",
+    "parquet_schema",
+    "read_parquet",
     "read_table",
     "read_tables",
     "register_tables",

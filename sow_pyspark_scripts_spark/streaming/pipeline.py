@@ -25,6 +25,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.parquet import parquet_schema
+
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over events.parquet with the ts normalization the batch
@@ -48,7 +50,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         link = os.path.join(stream_dir, "events.parquet")
         if not os.path.exists(link):
             os.symlink(path, link)
-    schema = spark.read.parquet(path).schema  # long (nanos) or TIMESTAMP_NTZ
+    schema = parquet_schema(spark, path)  # long (nanos) or TIMESTAMP_NTZ
     stream = spark.readStream.schema(schema).parquet(stream_dir)
     from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -71,7 +73,7 @@ def _table_bytes(sf_dir: str, table: str = "events") -> int:
 
 def adaptive_state_partitions(spark: SparkSession, nbytes: int | None) -> int:
     """Stateful-stage partition count for a streaming drain, derived
-    from the drained input size (guide §5/§2.2, VERDICT r8 task #1).
+    from the drained input size.
 
     Every stateful operator opens/commits one state store PER shuffle
     partition PER micro-batch (a stream-stream join opens FOUR), and

@@ -1,4 +1,4 @@
-"""Per-query optimization instrument (round 8): isolated timing + plan capture.
+"""Per-query optimization instrument: isolated timing + plan capture.
 
 For each named query: clear cache, release pins, one unmeasured warm
 pass (codegen/page-cache), one measured pass through the noop sink
@@ -10,8 +10,13 @@ Usage:
   python tools/measure_query.py NAME [NAME ...] [--sf-dir DIR]
       [--plans-out DIR] [--suffix before|after] [--repeat N]
 
-Writes one JSON line per query: {"query":..., "sec":[...], "plan": path}
-and a final summary line with the canaries.
+Writes one JSON line per query: {"query":..., "sec":[...],
+"build_s":[...], "build_jobs":[...], "plan": path} and a final summary
+line with the canaries. Per measured pass, ``sec`` is the wall time of
+build + noop write, ``build_s`` the time inside the registry callable
+(the driver's fixed cost: reads, planning helpers, eager pins) and
+``build_jobs`` the Spark jobs submitted while building, counted under
+the pass's job group. A value that was not captured is ``null``.
 """
 
 from __future__ import annotations
@@ -33,6 +38,14 @@ def _canary() -> dict:
     return bench._cpu_microbench()
 
 
+def _jobs_in_group(spark, group: str) -> int | None:
+    """Jobs the status tracker holds for ``group``; None if unreadable."""
+    try:
+        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+    except Exception:  # noqa: BLE001 — recorded as not captured
+        return None
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -48,8 +61,8 @@ def main() -> None:
     )
     args = ap.parse_args()
     if args.explain_only and not args.plans_out:
-        ap.error("--explain-only requires --plans-out (ADVICE r8: "
-                 "otherwise the loop records neither timing nor plan)")
+        ap.error("--explain-only requires --plans-out "
+                 "(otherwise the loop records neither timing nor plan)")
 
     from sow_pyspark_scripts_spark import registry
     from sow_pyspark_scripts_spark.functions.pin import release_pins
@@ -73,19 +86,21 @@ def main() -> None:
                 registry.QUERIES[name](spark, args.sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
-            secs = []
-            for _ in range(0 if args.explain_only else args.repeat):
+            secs, build_s, build_jobs = [], [], []
+            rec["sec"], rec["build_s"], rec["build_jobs"] = secs, build_s, build_jobs
+            for i in range(0 if args.explain_only else args.repeat):
                 release_pins(spark)
                 spark.catalog.clearCache()
                 gc.collect()
-                spark.sparkContext.setJobGroup(f"measure:{name}", name)
+                group = f"measure:{name}:{i}"
+                spark.sparkContext.setJobGroup(group, name)
                 t0 = time.perf_counter()
-                registry.QUERIES[name](spark, args.sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                df = registry.QUERIES[name](spark, args.sf_dir)
+                build_s.append(round(time.perf_counter() - t0, 3))
+                build_jobs.append(_jobs_in_group(spark, group))
+                df.write.format("noop").mode("overwrite").save()
                 secs.append(round(time.perf_counter() - t0, 3))
                 spark.sparkContext.setJobGroup("", "")
-            rec["sec"] = secs
             if args.plans_out:
                 Path(args.plans_out).mkdir(parents=True, exist_ok=True)
                 suffix = f"_{args.suffix}" if args.suffix else ""
